@@ -132,6 +132,10 @@ object Main {
         .config("spark.sql.shuffle.partitions",
           sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
         .config("spark.sql.session.timeZone", "UTC")
+        // one update compiles ~160 distinct generated classes; Spark's
+        // default 100-entry cache evicts them before the next forecast
+        // reuses them (same fixed size as Bench and Verify)
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
         .appName("graft-pipeline"))
         .getOrCreate()
       spark.sparkContext.setLogLevel(args.logLevel match {

@@ -2,8 +2,11 @@ package graft.pipeline
 
 import graft.geo.GeoFunctions._
 import graft.ops.{Aggregations, Cci, SpatialJoin}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import scala.jdk.CollectionConverters._
 
 /**
  * The storm impact dataflow (SURVEY.md §3.1) re-expressed as declarative
@@ -82,9 +85,13 @@ object ImpactPipeline {
   /**
    * Track (per-ensemble-member) severity view (impact_analysis.py:2038-2091):
    * per (threshold, member) envelope — facility counts within the envelope
-   * (null column when a facility layer is absent) and sums of tile metrics
-   * over intersecting tiles. Envelope side is small: both passes are
-   * broadcast matches over the big side, aggregated by (threshold, member).
+   * (null column when a facility layer is absent or empty) and sums of tile
+   * metrics over intersecting tiles.
+   *
+   * One pass: a single broadcast match over the facility points (tagged by
+   * kind) and the tiles, one groupBy(kind, envelope), and one collect of at
+   * most (kinds + 1) × envelopes rows; the rows are assembled on the driver
+   * into a local relation, one per envelope in envelope order.
    */
   def trackView(envelopes: DataFrame,
                 schools: DataFrame, hcs: DataFrame,
@@ -95,47 +102,51 @@ object ImpactPipeline {
       envelopes.select(col("wind_threshold"), col("ensemble_member"), col("geometry")),
       what = "trackView envelope side",
       alternative = "SpatialJoin.quadkeyRefineJoin + groupBy")
-    val envKeys = envRows.map(r => (r.getInt(0), r.getInt(1)))
     val envWkb = envRows.map(_.getAs[Array[Byte]](2))
-    import spark.implicits._
-    val envKeyDf = envKeys.zipWithIndex
-      .map { case ((th, m), i) => (i, th, m) }.toSeq
-      .toDF("__env", "wind_threshold", "ensemble_member")
 
-    // facility points per envelope (points-in-polygon count, J3)
-    def facilityCounts(fac: DataFrame, outCol: String): DataFrame =
-      SpatialJoin.broadcastMatch(fac, "geometry", envWkb, SpatialJoin.Intersects, "__envs")
-        .select(explode(col("__envs")).as("__env"))
-        .groupBy("__env").agg(count(lit(1)).as(outCol))
-
-    // tile metric sums per envelope (intersects, aggregation='sum')
     val tileMetrics = Seq("population", "school_age_population",
       "infant_population", "adolescent_population", "built_surface_m2")
       .filter(tiles.columns.contains)
-    val tileSums = SpatialJoin.broadcastMatch(tiles, "geometry", envWkb, SpatialJoin.Intersects, "__envs")
-      .select(col("__envs") +: tileMetrics.map(col): _*)
-      .select(explode(col("__envs")).as("__env") +: tileMetrics.map(col): _*)
-      .groupBy("__env")
-      .agg(tileMetrics.map(c => sum(col(c)).as(s"severity_$c")).head,
-           tileMetrics.map(c => sum(col(c)).as(s"severity_$c")).tail: _*)
+    // kinds 0..3 are the facility layers (schools and hcs always present),
+    // the tiles come last
+    val facilityCols = Seq("severity_schools", "severity_hcs",
+      "severity_num_shelters", "severity_num_wash")
+    val layers = Seq(Some(schools), Some(hcs), shelters, wash)
+    val tileKind = layers.size
+    def tagged(kind: Int, df: DataFrame, metrics: Seq[Column]): DataFrame =
+      df.select(lit(kind).as("__kind") +: col("geometry") +: metrics: _*)
+    val sides = layers.zipWithIndex.collect { case (Some(df), k) =>
+      tagged(k, df, tileMetrics.map(c => lit(null).cast(tiles.schema(c).dataType).as(c)))
+    } :+ tagged(tileKind, tiles, tileMetrics.map(col))
+    // every facility row also counts under envelope -1, which tells an empty
+    // layer (null column) from one that misses every envelope (0)
+    val envIdx = coalesce(col("__envs"), typedLit(Seq.empty[Int]))
+    val perKind = SpatialJoin.broadcastMatch(sides.reduce(_ union _), "geometry", envWkb,
+        SpatialJoin.Intersects, "__envs")
+      .select(col("__kind") +: explode(
+          when(col("__kind") < tileKind, concat(envIdx, array(lit(-1)))).otherwise(envIdx))
+        .as("__env") +: tileMetrics.map(col): _*)
+      .groupBy("__kind", "__env")
+      .agg(count(lit(1)).as("__n"), tileMetrics.map(c => sum(col(c)).as(s"severity_$c")): _*)
+    val sums = perKind.collect().map(r => (r.getInt(0), r.getInt(1)) -> r).toMap
 
-    val base = envKeyDf
-      .join(facilityCounts(schools, "severity_schools"), Seq("__env"), "left")
-      .join(facilityCounts(hcs, "severity_hcs"), Seq("__env"), "left")
-    val withShelters = shelters match {
-      case Some(s) if !s.isEmpty => base.join(facilityCounts(s, "severity_num_shelters"), Seq("__env"), "left")
-        .na.fill(0, Seq("severity_num_shelters"))
-      case _ => base.withColumn("severity_num_shelters", lit(null).cast("double"))
+    // shelters and wash: a count column when the layer has rows, else a null
+    // double column
+    val counted = facilityCols.indices.map(k => k < 2 || sums.contains((k, -1)))
+    val schema = StructType(
+      Seq(StructField("wind_threshold", IntegerType, nullable = false),
+        StructField("ensemble_member", IntegerType, nullable = false)) ++
+      facilityCols.zip(counted).map { case (c, n) => StructField(c, if (n) LongType else DoubleType) } ++
+      tileMetrics.map(c => perKind.schema(s"severity_$c")))
+    val rows = envRows.indices.map { i =>
+      val counts = counted.zipWithIndex.map { case (n, k) =>
+        if (n) sums.get((k, i)).map(_.getLong(2)).getOrElse(0L) else null
+      }
+      val metrics = tileMetrics.indices.map(j => sums.get((tileKind, i)).map(_.get(3 + j)).orNull)
+      Row.fromSeq(Seq[Any](envRows(i).getInt(0), envRows(i).getInt(1)) ++ counts ++ metrics)
     }
-    val withWash = wash match {
-      case Some(w2) if !w2.isEmpty => withShelters.join(facilityCounts(w2, "severity_num_wash"), Seq("__env"), "left")
-        .na.fill(0, Seq("severity_num_wash"))
-      case _ => withShelters.withColumn("severity_num_wash", lit(null).cast("double"))
-    }
-    withWash
-      .join(tileSums, Seq("__env"), "left")
-      .na.fill(0, Seq("severity_schools", "severity_hcs") ++ tileMetrics.map(c => s"severity_$c"))
-      .drop("__env")
+    spark.createDataFrame(rows.asJava, schema)
+      .na.fill(0, tileMetrics.map(c => s"severity_$c"))
   }
 
   /** CCI tile + admin views (impact_analysis.py:2579-2748, 2897-2917). */

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.io.DataStore
 import graft.ops.{AdminOverlay, Aggregations, Cci}
+import graft.util.Collects
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -145,105 +146,119 @@ object Jobs {
     if (!rewrite && processed.contains(key))
       return UpdateResult(processed = false, reason = "already-processed")
 
-    if (envelopes.isEmpty)
+    // the envelope side is small by construction (≤ 51 members × 8
+    // thresholds): collect it once into a local relation, so this check and
+    // every view's envelope collect below run no Spark job
+    val envs = {
+      val rows = Collects.boundedCollect(envelopes, what = "update envelope side",
+        alternative = "SpatialJoin.quadkeyRefineJoin + groupBy")
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), envelopes.schema)
+    }
+    if (envs.isEmpty)
       return UpdateResult(processed = false, reason = "no-envelopes")
 
     val prefix = s"${country}_${storm}_${date}_"
     store.removeByPrefix(ViewDirs, prefix)
 
-    val tiles = store.readParquet(spark, s"mercator_views/${country}_$zoom.parquet").cache()
-    val admins = store.readParquet(spark, s"admin_views/${country}_admin1.parquet")
-      .select(col("tile_id").as("id"), col("name"), col("geometry"))
+    // each shared view is computed once and cached where it is built; every
+    // cache is released on every exit path
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def cache(df: DataFrame): DataFrame = { cached += df; df.cache() }
+    try {
+      val tiles = cache(store.readParquet(spark, s"mercator_views/${country}_$zoom.parquet"))
+      val admins = store.readParquet(spark, s"admin_views/${country}_admin1.parquet")
+        .select(col("tile_id").as("id"), col("name"), col("geometry"))
 
-    // tile view + per-threshold CSVs (S9 layout: one per threshold) — one
-    // partitionBy pass fans out all thresholds (SURVEY.md §7.4)
-    val tv = ImpactPipeline.tileView(tiles, envelopes).cache()
-    fanoutViews(tv, "mercator_impact_views", th => s"$prefix${th}_$zoom.$vext")
+      // tile view + per-threshold CSVs (S9 layout: one per threshold) — one
+      // partitionBy pass fans out all thresholds (SURVEY.md §7.4)
+      val tv = cache(ImpactPipeline.tileView(tiles, envs))
+      fanoutViews(tv, "mercator_impact_views", th => s"$prefix${th}_$zoom.$vext")
 
-    // facility views ×4 (only kinds with a cached layer)
-    val facilityViews: Map[String, Option[DataFrame]] =
-      Seq("school" -> "school_id", "hc" -> "hc_id", "shelter" -> "shelter_id", "wash" -> "wash_id")
-        .map { case (kind, idCol) =>
-          val rel = s"${kind}_views/${country}_$kind.parquet"
-          kind -> (if (store.exists(rel)) {
-            val fv = ImpactPipeline.facilityView(store.readParquet(spark, rel), envelopes, idCol)
-            // one partitionBy pass fans out every threshold (S9 layout)
-            store.writePartitionedParquet(fv.drop("geometry"), s"${kind}_views",
-              "wind_threshold", th => s"$prefix$th.parquet")
-            Some(fv)
-          } else None)
-        }.toMap
+      // facility views ×4 (only kinds with a cached layer): kind -> (layer,
+      // view); the track view reads the same layers
+      val facilities: Map[String, (DataFrame, DataFrame)] =
+        Seq("school" -> "school_id", "hc" -> "hc_id", "shelter" -> "shelter_id", "wash" -> "wash_id")
+          .flatMap { case (kind, idCol) =>
+            val rel = s"${kind}_views/${country}_$kind.parquet"
+            if (!store.exists(rel)) None
+            else {
+              val layer = store.readParquet(spark, rel)
+              val fv = cache(ImpactPipeline.facilityView(layer, envs, idCol))
+              // one partitionBy pass fans out every threshold (S9 layout)
+              store.writePartitionedParquet(fv.drop("geometry"), s"${kind}_views",
+                "wind_threshold", th => s"$prefix$th.parquet")
+              Some(kind -> (layer, fv))
+            }
+          }.toMap
+      def facilityLayer(kind: String) = facilities.get(kind).map(_._1)
+      def facilityView(kind: String) = facilities.get(kind).map(_._2)
 
-    // admin views + CCIs — one pass per initialized admin level
-    // (impact_analysis.py:2868-2907): level 1 reuses the admin ids already
-    // on the tiles; deeper levels re-overlay against the level's stored
-    // boundaries — no external lookup, mirroring the reference's reuse of
-    // the admin parquet's geometries.
-    val (cciTiles, cciAdmin) = ImpactPipeline.cciViews(tv, tiles)
-    singleView(cciTiles, s"mercator_impact_views/$prefix${zoom}_cci.$vext")
+      // admin views + CCIs — one pass per initialized admin level
+      // (impact_analysis.py:2868-2907): level 1 reuses the admin ids already
+      // on the tiles; deeper levels re-overlay against the level's stored
+      // boundaries — no external lookup, mirroring the reference's reuse of
+      // the admin parquet's geometries.
+      val (cciTiles, cciAdmin) = ImpactPipeline.cciViews(tv, tiles)
+      cache(cciTiles); cache(cciAdmin)
+      singleView(cciTiles, s"mercator_impact_views/$prefix${zoom}_cci.$vext")
 
-    val levels = initializedAdminLevels(store, country) match {
-      case Seq() => Seq(1)
-      case ls => ls
-    }
-    var av: DataFrame = null // level-1 view doubles as the report input
-    levels.foreach { level =>
-      val adminsN = if (level == 1) admins
-        else store.readParquet(spark, s"admin_views/${country}_admin$level.parquet")
-          .select(col("tile_id").as("id"), col("name"), col("geometry"))
-      val mapRel = s"admin_views/${country}_admin${level}_tile_map.parquet"
-      val tileIds = if (level == 1) tiles.select("tile_id", "id")
-        else if (store.exists(mapRel)) store.readParquet(spark, mapRel) // precomputed at init
-        else AdminOverlay.assign(tiles.select("tile_id", "geometry"), adminsN)
-          .select("tile_id", "id")
-      val avN = ImpactPipeline.adminView(
-        if (level == 1) tv else tv.drop("id"), tileIds, adminsN)
-      fanoutViews(avN.drop("geometry"), "admin_impact_views",
-        th => s"$prefix${th}_admin$level.$vext")
-      val cciAdminN = if (level == 1) cciAdmin
-        else Cci.adminRollup(cciTiles.drop("id").join(
-          broadcast(tileIds.withColumnRenamed("tile_id", "zone_id")), Seq("zone_id"), "left"))
-      singleView(cciAdminN, s"admin_impact_views/${prefix}admin${level}_cci.$vext")
-      if (level == 1) av = avN.cache()
-    }
-    // the JSON report always reads the admin1 view, even when level 1 is not
-    // among the initialized levels (impact_analysis.py:2909-2914)
-    if (av == null)
-      av = ImpactPipeline.adminView(tv, tiles.select("tile_id", "id"), admins).cache()
+      val levels = initializedAdminLevels(store, country) match {
+        case Seq() => Seq(1)
+        case ls => ls
+      }
+      var av: DataFrame = null // level-1 view doubles as the report input
+      levels.foreach { level =>
+        val adminsN = if (level == 1) admins
+          else store.readParquet(spark, s"admin_views/${country}_admin$level.parquet")
+            .select(col("tile_id").as("id"), col("name"), col("geometry"))
+        val mapRel = s"admin_views/${country}_admin${level}_tile_map.parquet"
+        val tileIds = if (level == 1) tiles.select("tile_id", "id")
+          else if (store.exists(mapRel)) store.readParquet(spark, mapRel) // precomputed at init
+          else AdminOverlay.assign(tiles.select("tile_id", "geometry"), adminsN)
+            .select("tile_id", "id")
+        val avN = ImpactPipeline.adminView(
+          if (level == 1) tv else tv.drop("id"), tileIds, adminsN)
+        if (level == 1) av = cache(avN)
+        fanoutViews(avN.drop("geometry"), "admin_impact_views",
+          th => s"$prefix${th}_admin$level.$vext")
+        val cciAdminN = if (level == 1) cciAdmin
+          else Cci.adminRollup(cciTiles.drop("id").join(
+            broadcast(tileIds.withColumnRenamed("tile_id", "zone_id")), Seq("zone_id"), "left"))
+        singleView(cciAdminN, s"admin_impact_views/${prefix}admin${level}_cci.$vext")
+      }
+      // the JSON report always reads the admin1 view, even when level 1 is not
+      // among the initialized levels (impact_analysis.py:2909-2914)
+      if (av == null)
+        av = cache(ImpactPipeline.adminView(tv, tiles.select("tile_id", "id"), admins))
 
-    // track view
-    (facilityViews("school"), facilityViews("hc")) match {
-      case (Some(_), Some(_)) =>
-        val schools = store.readParquet(spark, s"school_views/${country}_school.parquet")
-        val hcs = store.readParquet(spark, s"hc_views/${country}_hc.parquet")
-        val shelters = if (store.exists(s"shelter_views/${country}_shelter.parquet"))
-          Some(store.readParquet(spark, s"shelter_views/${country}_shelter.parquet")) else None
-        val wash = if (store.exists(s"wash_views/${country}_wash.parquet"))
-          Some(store.readParquet(spark, s"wash_views/${country}_wash.parquet")) else None
-        val trackView = ImpactPipeline.trackView(envelopes, schools, hcs, shelters, wash, tiles)
-        trackView.write.mode("overwrite").parquet(store.path(s"track_views/${prefix}tracks.parquet"))
-      case _ => ()
-    }
+      // track view, over the facility layers the facility views read
+      (facilityLayer("school"), facilityLayer("hc")) match {
+        case (Some(schools), Some(hcs)) =>
+          store.writeParquet(ImpactPipeline.trackView(envs, schools, hcs,
+            facilityLayer("shelter"), facilityLayer("wash"), tiles),
+            s"track_views/${prefix}tracks.parquet")
+        case _ => ()
+      }
 
-    // report with as-of previous (J15)
-    val prevDate = Reports.previousDate(date)
-    val prevRel = s"reports_json/${country}_${storm}_$prevDate.json"
-    val previous = if (store.exists(prevRel)) Reports.fromJson(store.readText(prevRel)) else Map.empty[String, Any]
-    val adminNames = admins.select("id", "name").collect()
-      .map(r => (r.getString(0), r.getString(1))).sortBy(_._1).toSeq
-    val report = Reports.doReport(
-      tv, av, facilityViews("school"), facilityViews("hc"),
-      facilityViews("shelter"), facilityViews("wash"),
-      cciTiles, cciAdmin, adminNames, tracks, countryBoundaryWkb,
-      country, storm, date, previous)
-    if (report.nonEmpty)
-      store.writeText(s"reports_json/$prefix.json".replace("_.json", ".json"),
-        Reports.toJson(report))
+      // report with as-of previous (J15)
+      val prevDate = Reports.previousDate(date)
+      val prevRel = s"reports_json/${country}_${storm}_$prevDate.json"
+      val previous = if (store.exists(prevRel)) Reports.fromJson(store.readText(prevRel)) else Map.empty[String, Any]
+      val adminNames = admins.select("id", "name").collect()
+        .map(r => (r.getString(0), r.getString(1))).sortBy(_._1).toSeq
+      val report = Reports.doReport(
+        tv, av, facilityView("school"), facilityView("hc"),
+        facilityView("shelter"), facilityView("wash"),
+        cciTiles, cciAdmin, adminNames, tracks, countryBoundaryWkb,
+        country, storm, date, previous)
+      if (report.nonEmpty)
+        store.writeText(s"reports_json/$prefix.json".replace("_.json", ".json"),
+          Reports.toJson(report))
 
-    saveProcessed(store, processed + (key -> date))
-    appendRunLog(store, spark, storm, date, "SUCCESS", (System.nanoTime() - t0) / 1e9)
-    tiles.unpersist(); tv.unpersist(); av.unpersist()
-    UpdateResult(processed = true, reason = "ok", report = report)
+      saveProcessed(store, processed + (key -> date))
+      appendRunLog(store, spark, storm, date, "SUCCESS", (System.nanoTime() - t0) / 1e9)
+      UpdateResult(processed = true, reason = "ok", report = report)
+    } finally cached.foreach(_.unpersist())
   }
 
   // --- patch -------------------------------------------------------------

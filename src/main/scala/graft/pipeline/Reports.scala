@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.geo.{Geo, GeoFunctions}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,10 +12,21 @@ import java.util.Locale
 /**
  * JSON situation-report assembly (reference reports.py:577-783).
  *
- * All heavy inputs arrive as DataFrames; every aggregate collected here is
- * tiny (per-threshold totals, top-5 lists, per-admin rows), so assembly is
- * driver-side composition — the Spark-idiomatic shape for a ~200-key nested
- * document (SURVEY.md §2.9).
+ * All heavy inputs arrive as DataFrames. Each Spark query costs a fixed
+ * amount (scheduling, code generation) whatever its size, so [[doReport]]
+ * reads each input in one pass and brings each small result to the driver
+ * once:
+ *  - the admin view: one groupBy(admin, threshold) collect gives the
+ *    per-admin rows and, summed on the driver, `maxWind`;
+ *  - the tile view: one groupBy(threshold) collect gives the present
+ *    thresholds, the per-threshold totals and the urban/rural and
+ *    poverty/severe sums with their row counts;
+ *  - the CCI admin view: one collect gives the per-admin CCI values and
+ *    the country totals;
+ *  - each facility view: one top-5 query at the expected threshold;
+ *  - the tracks: the landfall estimate ([[expectedLandfall]]).
+ * Everything else is driver-side composition of those small results — the
+ * Spark-idiomatic shape for a ~200-key nested document (SURVEY.md §2.9).
  */
 object Reports {
 
@@ -93,19 +104,25 @@ object Reports {
     * monotone envelope property (reports.py:319-339, W6). A threshold whose
     * probabilities are all null sums to null — treated like NaN in the
     * reference (NaN > 0 is False), i.e. it breaks the scan, never NPEs. */
-  def maxWindThreshold(adminView: DataFrame): Int = {
-    val sums = adminView.groupBy("wind_threshold").agg(sum("probability").as("p"))
-      .collect().map(r => r.getInt(0) ->
-        Option(r.get(1)).map(_.asInstanceOf[Number].doubleValue()).getOrElse(0.0)).toMap
+  def maxWindThreshold(adminView: DataFrame): Int =
+    maxWindOf(adminView.groupBy("wind_threshold").agg(sum("probability").as("p"))
+      .collect().map(r => r.getInt(0) -> doubleOf(r.get(1))).toMap)
+
+  /** The ordered scan of [[maxWindThreshold]] over per-threshold
+    * probability sums (None = all-null). */
+  private def maxWindOf(sums: Map[Int, Option[Double]]): Int = {
     var maxWind = 0
     var broken = false
     Winds.foreach { w =>
       if (!broken) sums.get(w).foreach { p =>
-        if (p > 0) maxWind = w else broken = true
+        if (p.exists(_ > 0)) maxWind = w else broken = true
       }
     }
     maxWind
   }
+
+  private def doubleOf(v: Any): Option[Double] =
+    Option(v).map(_.asInstanceOf[Number].doubleValue())
 
   /** `_optional_ceil` (reports.py:29-34): None when the sum is null (all-NaN
     * / missing column) — ONLY the facility-count keys use this. */
@@ -133,6 +150,9 @@ object Reports {
    * the engine's long format (wind_threshold column instead of per-threshold
    * dicts). Returns an ordered key→value map; empty when no impact.
    *
+   * @param cciTiles the CCI tile view; unread, since the country totals are
+   *                 the sums of `cciAdmin`'s rows (kept in the signature for
+   *                 callers that pass both CCI views).
    * @param previous previous forecast's report (loaded by the caller from
    *                 the T−6h JSON, J15) — change fields are computed from it.
    */
@@ -146,11 +166,58 @@ object Reports {
                previous: Map[String, Any] = Map.empty,
                nowProvider: () => String = () => LocalDateTime.now().format(HumanFmt)): Map[String, Any] = {
 
-    val maxWind = maxWindThreshold(adminView)
+    // per-admin rows (reports.py:464-577) and maxWind from ONE pass over the
+    // long admin view: a threshold's probability sum is the sum of its
+    // admins' sums, null only when all of them are
+    val adminAgg = adminView.groupBy("tile_id", "wind_threshold").agg(
+      sum("E_population").as("pop"), sum("E_school_age_population").as("school"),
+      sum("E_infant_population").as("infant"), sum("E_adolescent_population").as("adolescent"),
+      sum("E_num_schools").as("schools"), sum("E_num_hcs").as("hcs"),
+      sum("E_num_shelters").as("shelters"), sum("E_num_wash").as("wash"),
+      sum("probability").as("p"))
+      .collect().map(r => (r.getString(0), r.getInt(1)) -> r).toMap
+    val maxWind = maxWindOf(adminAgg.toSeq
+      .groupMap(_._1._2)(e => doubleOf(e._2.getAs[Any]("p")))
+      .map { case (w, ps) => w -> ps.flatten.reduceOption(_ + _) })
     if (maxWind == 0) return Map.empty
 
-    val presentWinds = tileView.select("wind_threshold").distinct()
-      .collect().map(_.getInt(0)).sorted
+    // ONE pass over the tile view per threshold: the totals, and the
+    // vulnerability sums (reports.py:393-462) with the number of rows that
+    // carry data — none means null keys (no data), not 0 (confirmed zero).
+    // A row carries data when its index is neither null nor NaN (`na.drop`)
+    // and its probability is positive. Every ratio is guarded by that
+    // probability test itself: with ANSI on, common-subexpression
+    // elimination would evaluate an unguarded division outside its `when`.
+    val popCols = Seq("pop" -> "E_population", "school" -> "E_school_age_population",
+      "infant" -> "E_infant_population", "adolescent" -> "E_adolescent_population")
+    val positive = col("probability") > 0
+    def hasData(c: String): Column = col(c).isNotNull && !isnan(col(c)) && positive
+    def actual(c: String): Column = when(positive, col(c) / col("probability"))
+    val smod = actual("E_smod_class")
+    val rwi = actual("E_rwi")
+    val buckets = Seq(
+      "urban" -> (hasData("E_smod_class") && smod >= Constants.UrbanSmodThreshold),
+      "rural" -> (hasData("E_smod_class") && smod < Constants.UrbanSmodThreshold),
+      "poverty" -> (hasData("E_rwi") && rwi >= Constants.RwiSevere && rwi < Constants.RwiPoverty),
+      "severe" -> (hasData("E_rwi") && rwi < Constants.RwiSevere))
+    val tileAggs = Seq(
+      sum("E_school_age_population").as("school"),
+      sum("E_infant_population").as("infant"),
+      sum("E_adolescent_population").as("adolescent"),
+      sum("E_population").as("pop"),
+      sum("E_num_schools").as("schools"),
+      sum("E_num_hcs").as("hcs"),
+      sum("E_num_shelters").as("shelters"),
+      sum("E_num_wash").as("wash"),
+      count(when(hasData("E_smod_class"), lit(1))).as("smod_rows"),
+      count(when(hasData("E_rwi"), lit(1))).as("rwi_rows")) ++
+      buckets.flatMap { case (b, cond) =>
+        popCols.map { case (k, c) => sum(when(cond, col(c))).as(s"${b}_$k") }
+      }
+    val totalsByWind = tileView.groupBy("wind_threshold").agg(tileAggs.head, tileAggs.tail: _*)
+      .collect().map(r => r.getInt(0) -> r).toMap
+
+    val presentWinds = totalsByWind.keys.toSeq.sorted
     if (presentWinds.isEmpty) return Map.empty
     val expectedWind = if (presentWinds.contains(KeyForExpected)) KeyForExpected else presentWinds.min
 
@@ -165,19 +232,6 @@ object Reports {
     })
     d += "next_forecast_date" -> futureDate(date, Constants.ForecastStepHours)
     d += "report_date" -> nowProvider()
-
-    // per-threshold totals in ONE aggregation pass (the reference loops
-    // per-threshold over pandas frames)
-    val totalsByWind = tileView.groupBy("wind_threshold").agg(
-      sum("E_school_age_population").as("school"),
-      sum("E_infant_population").as("infant"),
-      sum("E_adolescent_population").as("adolescent"),
-      sum("E_population").as("pop"),
-      sum("E_num_schools").as("schools"),
-      sum("E_num_hcs").as("hcs"),
-      sum("E_num_shelters").as("shelters"),
-      sum("E_num_wash").as("wash"))
-      .collect().map(r => r.getInt(0) -> r).toMap
 
     val exp = totalsByWind(expectedWind)
     val expSchool = ceilOrZero(exp.get(exp.fieldIndex("school")))
@@ -194,12 +248,15 @@ object Reports {
     d += "expected_shelters" -> ceilOrNull(exp.get(exp.fieldIndex("shelters")))
     d += "expected_wash" -> ceilOrNull(exp.get(exp.fieldIndex("wash")))
 
-    val cciSums = cciTiles.agg(
-      sum("E_CCI_pop"), sum("E_CCI_school_age"), sum("E_CCI_infants"), sum("E_CCI_adolescents")).head()
-    d += "expected_cci_pop" -> intOrZero(cciSums.get(0))
-    d += "expected_cci_school" -> intOrZero(cciSums.get(1))
-    d += "expected_cci_infant" -> intOrZero(cciSums.get(2))
-    d += "expected_cci_adolescent" -> intOrZero(cciSums.get(3))
+    // per-admin CCI values and the country totals from ONE collect
+    val cciRows = cciAdmin.collect()
+    val cciByAdmin = cciRows.map(r => r.getAs[String]("id") -> r).toMap
+    def cciTotal(c: String): Long =
+      cciRows.flatMap(r => doubleOf(r.getAs[Any](c))).reduceOption(_ + _).map(_.toLong).getOrElse(0L)
+    d += "expected_cci_pop" -> cciTotal("E_CCI_pop")
+    d += "expected_cci_school" -> cciTotal("E_CCI_school_age")
+    d += "expected_cci_infant" -> cciTotal("E_CCI_infants")
+    d += "expected_cci_adolescent" -> cciTotal("E_CCI_adolescents")
 
     // children change vs previous forecast (reports.py:360-391)
     val prevChildren = previous.get("expected_children").collect { case n: Number => n.longValue() }
@@ -252,23 +309,21 @@ object Reports {
       }
     }
 
-    // top-5 facilities by probability at the expected threshold (W1)
+    // top-5 facilities by probability at the expected threshold (W1). A
+    // facility view has the tile view's thresholds: both come from
+    // probabilityByThreshold(keepZeroRows = true) over the same envelopes.
     def topFacilities(view: Option[DataFrame], prefix: String,
                       nameCol: String, typeCol: String, typeKey: String): Unit =
       view.foreach { v =>
-        val winds = v.select("wind_threshold").distinct().collect().map(_.getInt(0))
-        if (winds.nonEmpty) {
-          val wSel = if (winds.contains(KeyForExpected)) KeyForExpected else winds.min
-          val top = v.filter(col("wind_threshold") === wSel)
-            .orderBy(col("probability").desc)
-            .limit(Constants.TopK).collect()
-          top.zipWithIndex.foreach { case (row, i) =>
-            def get(c: String): Any =
-              if (row.schema.fieldNames.contains(c)) row.getAs[Any](c) else ""
-            d += s"${prefix}_name_${i + 1}" -> get(nameCol)
-            d += s"${prefix}_${typeKey}_${i + 1}" -> get(typeCol)
-            d += s"${prefix}_prob_${i + 1}" -> row.getAs[Double]("probability")
-          }
+        val top = v.filter(col("wind_threshold") === expectedWind)
+          .orderBy(col("probability").desc)
+          .limit(Constants.TopK).collect()
+        top.zipWithIndex.foreach { case (row, i) =>
+          def get(c: String): Any =
+            if (row.schema.fieldNames.contains(c)) row.getAs[Any](c) else ""
+          d += s"${prefix}_name_${i + 1}" -> get(nameCol)
+          d += s"${prefix}_${typeKey}_${i + 1}" -> get(typeCol)
+          d += s"${prefix}_prob_${i + 1}" -> row.getAs[Double]("probability")
         }
       }
     topFacilities(schoolView, "school", "school_name", "education_level", "edulevel")
@@ -276,65 +331,15 @@ object Reports {
     topFacilities(shelterView, "shelter", "name", "shelter_type", "type")
     topFacilities(washView, "wash", "name", "wash_type", "type")
 
-    // vulnerability metrics at the expected threshold (reports.py:393-462):
-    // null = no data, 0 = confirmed zero
-    val expTiles = tileView.filter(col("wind_threshold") === expectedWind)
-    val smodTiles = expTiles.na.drop(Seq("E_smod_class")).filter(col("probability") > 0)
-    val popCols = Seq("pop" -> "E_population", "school" -> "E_school_age_population",
-      "infant" -> "E_infant_population", "adolescent" -> "E_adolescent_population")
-    if (smodTiles.isEmpty) {
-      popCols.foreach { case (k, _) =>
-        d += s"expected_${k}_urban" -> null; d += s"expected_${k}_rural" -> null
+    // vulnerability metrics at the expected threshold, from the tile pass
+    Seq("smod_rows" -> Seq("urban", "rural"), "rwi_rows" -> Seq("poverty", "severe"))
+      .foreach { case (rows, names) =>
+        val noData = exp.getAs[Long](rows) == 0
+        for (b <- names; (k, _) <- popCols)
+          d += s"expected_${k}_$b" -> (if (noData) null else intOrZero(exp.getAs[Any](s"${b}_$k")))
       }
-    } else {
-      // one aggregation pass for all 8 urban/rural sums (the reference
-      // filters the tile frame twice per metric)
-      val aggExprs = popCols.map { case (k, c) =>
-        sum(when(col("E_smod_class") / col("probability") >= Constants.UrbanSmodThreshold, col(c)))
-          .as(s"urban_$k")
-      } ++ popCols.map { case (k, c) =>
-        sum(when(col("E_smod_class") / col("probability") < Constants.UrbanSmodThreshold, col(c)))
-          .as(s"rural_$k")
-      }
-      val agg = smodTiles.agg(aggExprs.head, aggExprs.tail: _*).head()
-      def sumOrZero(c: String): Long =
-        Option(agg.getAs[Any](c)).map(_.asInstanceOf[Number].doubleValue().toLong).getOrElse(0L)
-      popCols.foreach { case (k, _) =>
-        d += s"expected_${k}_urban" -> sumOrZero(s"urban_$k")
-        d += s"expected_${k}_rural" -> sumOrZero(s"rural_$k")
-      }
-    }
-    val rwiTiles = expTiles.na.drop(Seq("E_rwi")).filter(col("probability") > 0)
-    if (rwiTiles.isEmpty) {
-      popCols.foreach { case (k, _) =>
-        d += s"expected_${k}_poverty" -> null; d += s"expected_${k}_severe" -> null
-      }
-    } else {
-      val actualRwi = col("E_rwi") / col("probability")
-      val aggExprs = popCols.map { case (k, c) =>
-        sum(when(actualRwi >= Constants.RwiSevere && actualRwi < Constants.RwiPoverty, col(c)))
-          .as(s"poverty_$k")
-      } ++ popCols.map { case (k, c) =>
-        sum(when(actualRwi < Constants.RwiSevere, col(c))).as(s"severe_$k")
-      }
-      val agg = rwiTiles.agg(aggExprs.head, aggExprs.tail: _*).head()
-      def sumOrZero(c: String): Long =
-        Option(agg.getAs[Any](c)).map(_.asInstanceOf[Number].doubleValue().toLong).getOrElse(0L)
-      popCols.foreach { case (k, _) =>
-        d += s"expected_${k}_poverty" -> sumOrZero(s"poverty_$k")
-        d += s"expected_${k}_severe" -> sumOrZero(s"severe_$k")
-      }
-    }
 
-    // per-admin rows (reports.py:464-577): one pass over the long admin view
-    val adminAgg = adminView.groupBy("tile_id", "wind_threshold").agg(
-      sum("E_population").as("pop"), sum("E_school_age_population").as("school"),
-      sum("E_infant_population").as("infant"), sum("E_adolescent_population").as("adolescent"),
-      sum("E_num_schools").as("schools"), sum("E_num_hcs").as("hcs"),
-      sum("E_num_shelters").as("shelters"), sum("E_num_wash").as("wash"))
-      .collect().map(r => (r.getString(0), r.getInt(1)) -> r).toMap
-    val cciByAdmin = cciAdmin.collect().map(r => r.getAs[String]("id") -> r).toMap
-
+    // per-admin rows from the admin pass
     def prevRows(key: String): Seq[Map[String, Any]] = previous.get(key) match {
       case Some(s: Seq[_]) => s.collect { case m: Map[_, _] => m.asInstanceOf[Map[String, Any]] }
       case _ => Nil

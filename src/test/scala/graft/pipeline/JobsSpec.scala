@@ -185,6 +185,21 @@ class JobsSpec extends SparkSpec {
     assert(unexpected.isEmpty, s"unexpectedly missing: $unexpected")
   }
 
+  test("an update that fails releases every cache it made") {
+    initOnce()
+    // caches left by earlier suites are not this update's
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val persisted0 = sc.getPersistentRDDs.keySet
+    // the report's landfall estimate orders each member's track by valid_time
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Jobs.update(spark, store, country, zoom, "LEAKSTORM", "20260801000000",
+        envs, Some(tracks.drop("valid_time")), Some(boundary))
+    }
+    assert(sc.getPersistentRDDs.keySet == persisted0)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("report JSON round-trips through the serializer") {
     val report = Map[String, Any]("a" -> 1L, "b" -> "x", "c" -> null,
       "rows" -> Seq(Map[String, Any]("name" -> "R1", "34" -> 5L, "64" -> null)))
