@@ -113,7 +113,7 @@ class DataStore(root: String,
                           fileName: String => String): Seq[String] = {
     val dir = Paths.get(path(relDir))
     Files.createDirectories(dir)
-    val tmp = dir.resolve(s".__fanout_${System.nanoTime()}__")
+    val tmp = dir.resolve(s".__fanout_${java.util.UUID.randomUUID()}__")
     df.repartition(col(partitionCol))
       .write.mode(SaveMode.Overwrite)
       .partitionBy(partitionCol)
@@ -144,7 +144,7 @@ class DataStore(root: String,
                               dirName: String => String): Seq[String] = {
     val dir = Paths.get(path(relDir))
     Files.createDirectories(dir)
-    val tmp = dir.resolve(s".__fanout_${System.nanoTime()}__")
+    val tmp = dir.resolve(s".__fanout_${java.util.UUID.randomUUID()}__")
     df.repartition(col(partitionCol))
       .write.mode(SaveMode.Overwrite)
       .partitionBy(partitionCol)

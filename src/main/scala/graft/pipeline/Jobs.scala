@@ -6,6 +6,8 @@ import graft.util.Collects
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import java.util.concurrent.{Callable, ExecutionException, Executors, Future, TimeUnit}
+
 /**
  * The three pipeline entry modes (reference main_pipeline.py:816-828):
  * initialize (build base layers), update (process a storm forecast), patch
@@ -44,7 +46,7 @@ object Jobs {
     val row = Seq((storm, date, status, runtimeSeconds,
       java.time.Instant.now().toString)).toDF(
       "storm", "forecast_time", "status", "runtime_seconds", "logged_at")
-    row.write.mode("append").parquet(store.path("run_log"))
+    store.controlTables.append(row, "run_log")
   }
 
   // --- initialize --------------------------------------------------------
@@ -121,11 +123,28 @@ object Jobs {
    * Process one (storm, forecast) for one country
    * (impact_analysis.py:2757-2933): all views + CCI + report, with
    * prefix cleanup, processed-state dedup and run logging.
+   *
+   * Two phases. The build phase, on the calling thread, cleans the stale
+   * outputs by prefix, reads the base layers and builds every view frame,
+   * caching each shared one. The publish phase then runs each output (the
+   * tile-view fan-out, each facility view, the CCI tile view, each admin
+   * level's fan-out and CCI rollup, the track view, the report) on a thread
+   * of its own, so their small Spark jobs share the cores instead of
+   * queueing. An output that reads a shared cache starts after the one
+   * output that fills it, so an update runs the same jobs as when its outputs
+   * run one by one. The threads are created by the caller, so every job
+   * carries the caller's local properties (job group, description, scheduler
+   * pool). Only when every output has been published does the update record
+   * the forecast in storms.json and append a SUCCESS row to the run log. A
+   * failed output is rethrown as itself, with the other outputs' failures
+   * attached as suppressed, once every output has stopped and before the
+   * caches are released.
+   *
+   * @param viewFormat "csv" (default — the reference's single-file-per-view
+   *                   contract) or "parquet" (partitioned, multi-writer:
+   *                   the at-scale layout; same directory/name scheme with
+   *                   a .parquet extension)
    */
-  /** @param viewFormat "csv" (default — the reference's single-file-per-view
-    *                    contract) or "parquet" (partitioned, multi-writer:
-    *                    the at-scale layout; same directory/name scheme with
-    *                    a .parquet extension) */
   def update(spark: SparkSession, store: DataStore, country: String, zoom: Int,
              storm: String, date: String,
              envelopes: DataFrame, tracks: Option[DataFrame],
@@ -164,6 +183,17 @@ object Jobs {
     // cache is released on every exit path
     val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def cache(df: DataFrame): DataFrame = { cached += df; df.cache() }
+    // The publish phase: each output's Spark work, run once the build is
+    // done. A cached frame is filled by the first query that reads it, and
+    // every query that starts reading it before that fill ends runs a fill
+    // job of its own. So each shared cache has one output that fills it, and
+    // the other outputs that read it start after that one has finished.
+    val outputs = scala.collection.mutable.ArrayBuffer.empty[Output]
+    def publish(after: Int*)(output: => Unit): Int = {
+      outputs += Output(after, () => output)
+      outputs.size - 1
+    }
+    var report = Map.empty[String, Any] // set by the report output
     try {
       val tiles = cache(store.readParquet(spark, s"mercator_views/${country}_$zoom.parquet"))
       val admins = store.readParquet(spark, s"admin_views/${country}_admin1.parquet")
@@ -172,10 +202,13 @@ object Jobs {
       // tile view + per-threshold CSVs (S9 layout: one per threshold) — one
       // partitionBy pass fans out all thresholds (SURVEY.md §7.4)
       val tv = cache(ImpactPipeline.tileView(tiles, envs))
-      fanoutViews(tv, "mercator_impact_views", th => s"$prefix${th}_$zoom.$vext")
+      val tileOutput = // fills tiles and tv
+        publish()(fanoutViews(tv, "mercator_impact_views", th => s"$prefix${th}_$zoom.$vext"))
 
       // facility views ×4 (only kinds with a cached layer): kind -> (layer,
-      // view); the track view reads the same layers
+      // view); the track view reads the same layers. Each view's output
+      // fills its cache; the report, which reads it too, starts after.
+      val reportAfter = scala.collection.mutable.ArrayBuffer(tileOutput)
       val facilities: Map[String, (DataFrame, DataFrame)] =
         Seq("school" -> "school_id", "hc" -> "hc_id", "shelter" -> "shelter_id", "wash" -> "wash_id")
           .flatMap { case (kind, idCol) =>
@@ -185,8 +218,8 @@ object Jobs {
               val layer = store.readParquet(spark, rel)
               val fv = cache(ImpactPipeline.facilityView(layer, envs, idCol))
               // one partitionBy pass fans out every threshold (S9 layout)
-              store.writePartitionedParquet(fv.drop("geometry"), s"${kind}_views",
-                "wind_threshold", th => s"$prefix$th.parquet")
+              reportAfter += publish()(store.writePartitionedParquet(fv.drop("geometry"),
+                s"${kind}_views", "wind_threshold", th => s"$prefix$th.parquet"))
               Some(kind -> (layer, fv))
             }
           }.toMap
@@ -200,7 +233,9 @@ object Jobs {
       // the admin parquet's geometries.
       val (cciTiles, cciAdmin) = ImpactPipeline.cciViews(tv, tiles)
       cache(cciTiles); cache(cciAdmin)
-      singleView(cciTiles, s"mercator_impact_views/$prefix${zoom}_cci.$vext")
+      val cciOutput = // fills cciTiles
+        publish(tileOutput)(singleView(cciTiles, s"mercator_impact_views/$prefix${zoom}_cci.$vext"))
+      reportAfter += cciOutput
 
       val levels = initializedAdminLevels(store, country) match {
         case Seq() => Seq(1)
@@ -219,12 +254,15 @@ object Jobs {
         val avN = ImpactPipeline.adminView(
           if (level == 1) tv else tv.drop("id"), tileIds, adminsN)
         if (level == 1) av = cache(avN)
-        fanoutViews(avN.drop("geometry"), "admin_impact_views",
-          th => s"$prefix${th}_admin$level.$vext")
         val cciAdminN = if (level == 1) cciAdmin
           else Cci.adminRollup(cciTiles.drop("id").join(
             broadcast(tileIds.withColumnRenamed("tile_id", "zone_id")), Seq("zone_id"), "left"))
-        singleView(cciAdminN, s"admin_impact_views/${prefix}admin${level}_cci.$vext")
+        // at level 1 these two fill av and cciAdmin
+        val viewOutput = publish(tileOutput)(fanoutViews(avN.drop("geometry"),
+          "admin_impact_views", th => s"$prefix${th}_admin$level.$vext"))
+        val cciOutputN = publish(cciOutput)(
+          singleView(cciAdminN, s"admin_impact_views/${prefix}admin${level}_cci.$vext"))
+        if (level == 1) reportAfter ++= Seq(viewOutput, cciOutputN)
       }
       // the JSON report always reads the admin1 view, even when level 1 is not
       // among the initialized levels (impact_analysis.py:2909-2914)
@@ -234,31 +272,72 @@ object Jobs {
       // track view, over the facility layers the facility views read
       (facilityLayer("school"), facilityLayer("hc")) match {
         case (Some(schools), Some(hcs)) =>
-          store.writeParquet(ImpactPipeline.trackView(envs, schools, hcs,
+          publish(tileOutput)(store.writeParquet(ImpactPipeline.trackView(envs, schools, hcs,
             facilityLayer("shelter"), facilityLayer("wash"), tiles),
-            s"track_views/${prefix}tracks.parquet")
+            s"track_views/${prefix}tracks.parquet"))
         case _ => ()
       }
 
       // report with as-of previous (J15)
-      val prevDate = Reports.previousDate(date)
-      val prevRel = s"reports_json/${country}_${storm}_$prevDate.json"
-      val previous = if (store.exists(prevRel)) Reports.fromJson(store.readText(prevRel)) else Map.empty[String, Any]
-      val adminNames = admins.select("id", "name").collect()
-        .map(r => (r.getString(0), r.getString(1))).sortBy(_._1).toSeq
-      val report = Reports.doReport(
-        tv, av, facilityView("school"), facilityView("hc"),
-        facilityView("shelter"), facilityView("wash"),
-        cciTiles, cciAdmin, adminNames, tracks, countryBoundaryWkb,
-        country, storm, date, previous)
-      if (report.nonEmpty)
-        store.writeText(s"reports_json/$prefix.json".replace("_.json", ".json"),
-          Reports.toJson(report))
+      val adminView = av
+      publish(reportAfter.toSeq: _*) {
+        val prevDate = Reports.previousDate(date)
+        val prevRel = s"reports_json/${country}_${storm}_$prevDate.json"
+        val previous = if (store.exists(prevRel)) Reports.fromJson(store.readText(prevRel)) else Map.empty[String, Any]
+        val adminNames = admins.select("id", "name").collect()
+          .map(r => (r.getString(0), r.getString(1))).sortBy(_._1).toSeq
+        report = Reports.doReport(
+          tv, adminView, facilityView("school"), facilityView("hc"),
+          facilityView("shelter"), facilityView("wash"),
+          cciTiles, cciAdmin, adminNames, tracks, countryBoundaryWkb,
+          country, storm, date, previous)
+        if (report.nonEmpty)
+          store.writeText(s"reports_json/$prefix.json".replace("_.json", ".json"),
+            Reports.toJson(report))
+      }
 
+      runConcurrently(outputs.toSeq)
       saveProcessed(store, processed + (key -> date))
       appendRunLog(store, spark, storm, date, "SUCCESS", (System.nanoTime() - t0) / 1e9)
       UpdateResult(processed = true, reason = "ok", report = report)
     } finally cached.foreach(_.unpersist())
+  }
+
+  /** One output of an update: its Spark work, and the indices of the earlier
+    * outputs it starts after. */
+  private final case class Output(after: Seq[Int], run: () => Unit)
+
+  /** Runs each output on a thread of its own, once the outputs it starts
+    * after have finished, and returns once all of them have stopped. The
+    * threads are created here, on the calling thread, so they inherit its
+    * Spark local properties. The first output's failure, in output order, is
+    * rethrown as itself with the later ones attached as suppressed. */
+  private def runConcurrently(outputs: Seq[Output]): Unit = {
+    val pool = Executors.newFixedThreadPool(outputs.size)
+    try {
+      val futures = scala.collection.mutable.ArrayBuffer.empty[Future[Unit]]
+      outputs.foreach { output =>
+        val after = output.after.map(futures)
+        futures += pool.submit(new Callable[Unit] {
+          def call(): Unit = {
+            // an earlier output's failure is reported through its own future
+            after.foreach(f => try f.get() catch { case _: ExecutionException => () })
+            output.run()
+          }
+        })
+      }
+      val failures = futures.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.filter(_ ne first).foreach(first.addSuppressed)
+        throw first
+      }
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+    }
   }
 
   // --- patch -------------------------------------------------------------

@@ -57,10 +57,10 @@ object Reports {
    * Expected landfall (reports.py:256-311, J16/W7): per ensemble member the
    * first (time-ordered) track point inside the country — else the first
    * track segment crossing the boundary; report min–max lead time plus the
-   * member fraction. One window pass + one broadcast geometry test.
+   * member fraction. One window pass + one broadcast geometry test. No
+   * track rows give "Unknown" through the same aggregate (no member lands).
    */
   def expectedLandfall(tracks: DataFrame, countryWkb: Array[Byte], date: String): String = {
-    if (tracks.isEmpty) return "Unknown"
     val spark = tracks.sparkSession
     val bc = spark.sparkContext.broadcast(countryWkb)
     val cache = new graft.util.ThreadLocalCache[org.locationtech.jts.geom.prep.PreparedGeometry](

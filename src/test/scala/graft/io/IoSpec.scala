@@ -148,4 +148,29 @@ class IoSpec extends SparkSpec {
     // old vintage surfaces null for the later-added column
     assert(rows == Seq((1L, None), (2L, Some(9L))))
   }
+
+  test("concurrent fan-outs into one directory each publish their full file set") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-fanout").toString
+    val store = new DataStore(dir)
+    val df = (1 to 40).map(i => (i % 4, i)).toDF("k", "v")
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val writes = Seq("a", "b").map { name =>
+        pool.submit(new java.util.concurrent.Callable[Seq[String]] {
+          def call(): Seq[String] = {
+            start.await()
+            store.writePartitionedCsv(df, "views", "k", k => s"${name}_$k.csv")
+          }
+        })
+      }
+      start.countDown()
+      val expected = Seq("a", "b").map(n => (0 to 3).map(k => s"${n}_$k.csv"))
+      assert(writes.map(_.get()) == expected)
+      assert(store.list("views") == expected.flatten.sorted)
+      expected.flatten.foreach { f =>
+        assert(spark.read.option("header", "true").csv(store.path(s"views/$f")).count() == 10, f)
+      }
+    } finally pool.shutdown()
+  }
 }

@@ -3,7 +3,26 @@ package graft.pipeline
 import graft.SparkSpec
 import graft.io.DataStore
 import graft.geo.Geo
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
+
+object JobsSpec {
+  final class WriteFailed extends RuntimeException("single-file CSV write failed")
+
+  /** A store whose every single-file CSV write fails. */
+  final class FailingCsvStore(root: String) extends DataStore(root) {
+    val calls = new AtomicInteger()
+    override def writeSingleCsv(df: DataFrame, rel: String): Unit = {
+      calls.incrementAndGet()
+      throw new WriteFailed
+    }
+  }
+}
 
 /** Lifecycle test: initialize → update → next-forecast update (as-of deltas)
   * → patch → idempotent re-run. Mirrors SURVEY.md §3 on the synthetic
@@ -198,6 +217,48 @@ class JobsSpec extends SparkSpec {
     }
     assert(sc.getPersistentRDDs.keySet == persisted0)
     assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("an update whose output fails rethrows that failure once every output has stopped") {
+    initOnce()
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val persisted0 = sc.getPersistentRDDs.keySet
+    val failing = new JobsSpec.FailingCsvStore(root)
+    val thrown = intercept[JobsSpec.WriteFailed] {
+      Jobs.update(spark, failing, country, zoom, "FAILSTORM", "20260801000000",
+        envs, Some(tracks), Some(boundary))
+    }
+    // the CCI tile view and each admin level's CCI rollup are single CSVs
+    assert(failing.calls.get >= 2)
+    assert(thrown.getSuppressed.length == failing.calls.get - 1)
+    assert(thrown.getSuppressed.forall(_.isInstanceOf[JobsSpec.WriteFailed]))
+    ListenerBusDrain(sc)
+    assert(sc.statusTracker.getActiveJobIds().isEmpty)
+    assert(sc.getPersistentRDDs.keySet == persisted0)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(!Jobs.loadProcessed(store).contains(
+      Jobs.processedKey("FAILSTORM", Seq(country), "20260801000000")))
+    assert(!store.exists("run_log") ||
+      spark.read.parquet(store.path("run_log")).filter(col("storm") === "FAILSTORM").isEmpty)
+  }
+
+  test("every job an update starts carries the caller's job group") {
+    initOnce()
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup("g", "storm update")
+    try assert(Jobs.update(spark, store, country, zoom, "TESTSTORM", "20260801000000",
+      envs, Some(tracks), Some(boundary), rewrite = true).processed)
+    finally { sc.clearJobGroup(); ListenerBusDrain(sc); sc.removeSparkListener(listener) }
+    assert(!groups.isEmpty)
+    assert(groups.asScala.forall(_ == "g"), groups.asScala.toSeq.distinct)
   }
 
   test("report JSON round-trips through the serializer") {

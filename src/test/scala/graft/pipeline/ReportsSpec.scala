@@ -135,4 +135,10 @@ class ReportsSpec extends SparkSpec {
     for (b <- Seq("urban", "rural", "poverty", "severe"); k <- Seq("pop", "school", "infant", "adolescent"))
       assert(report(s"expected_${k}_$b") == null, s"expected_${k}_$b")
   }
+
+  test("expected landfall of an empty track set is Unknown") {
+    val none = SyntheticScenario.tracks(spark, members = 2).filter(lit(false))
+    val country = graft.geo.Geo.toWkb(graft.geo.Geo.box(-72.2, 18.8, -71.7, 19.2))
+    assert(Reports.expectedLandfall(none, country, "20260801000000") == "Unknown")
+  }
 }
