@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Prints ONE compact JSON line (the driver's tail capture
   * is byte-limited, so the stdout line must stay short: total + sf + the
@@ -23,54 +22,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Stream checkpoints/state stores/microbatch drops and shuffle spills
-    // all land in java.io.tmpdir + spark.local.dir, which default to the
-    // DISK-backed /tmp — the streaming gates' run-to-run swing (s16
-    // 7.7 s contended vs 3.7 s isolated in one full run) is that disk.
-    // Use the tmpfs when present so the bench measures the operators,
-    // not the VM's block device. Opt out with SPARK_GRAFT_TMPDIR.
-    val tmp = sys.env.getOrElse("SPARK_GRAFT_TMPDIR",
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-bench"
-      else System.getProperty("java.io.tmpdir"))
-    new java.io.File(tmp).mkdirs()
-    System.setProperty("java.io.tmpdir", tmp)
-    // shell-free local FS (see graft.io.NioLocalFs): without libhadoop the
-    // stock RawLocalFileSystem forks chmod/readlink subprocesses on every
-    // checkpoint mkdir/create/rename — ~525 forks per stateful-gate rep,
-    // 0.7-1.0 s of non-job wall each on fork-slow hosts
-    val spark = graft.io.NioLocalFs.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalesce floor (r13, guide §2.2/§2.5): Spark's 1m default is
-      // tuned for byte-bound stages; the LLM text kernels are CPU-dense
-      // but byte-light (5k docs ≈ 1.5 MB), so the 1m floor coalesces
-      // their post-shuffle stages to ONE task and serializes the kernel.
-      // At production scale the parallelismFirst target
-      // (total/defaultParallelism) dwarfs any floor, so this value only
-      // matters in the small-input regime. Env-parameterised.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "64k"))
-      // Generated-code cache (r14, guide §1/§7): the default 100 entries
-      // is sized for apps with a handful of query shapes; this bench runs
-      // ~300 queries × ~10 codegen fragments each, so by the time a
-      // query's measured reps came around its fragments were long
-      // evicted — every reference re-generated + re-Janino'd the class
-      // and restarted JIT tiering from scratch. That made reps measure
-      // the compiler, not the plan (random ~10-query cohorts ran 3-4×
-      // slow per run as the C2 queue congested: full-suite totals swung
-      // 220-241 s with first_pass 228-264 s). With the cache sized to
-      // the suite the classes from the warmup survive to every rep:
-      // 163.1 s total with first_pass 165.1 — variance gone. Static
-      // conf, so it must be set before the context starts; mirrored in
-      // Verify/JobProfile so correctness runs the identical engine.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE_ENTRIES", "8192"))
-      .config("spark.local.dir", tmp)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.geo.GeoFunctions.ensureRegistered(spark)
+    val spark = EngineSession.start("graft-bench", scratch = true)
     // warmup: pay one-time session/codegen/JIT costs outside the
     // measurements — run every query once, untimed, at the smallest SF so
     // each query shape's generated code is compiled before its measured run
@@ -89,25 +41,6 @@ object Bench {
     // SPARK_GRAFT_BENCH_VERBOSE=1: per-rep times to stderr (profiling runs)
     val verbose = sys.env.contains("SPARK_GRAFT_BENCH_VERBOSE")
     val failed = scala.collection.mutable.ListBuffer.empty[String]
-    // Many operators localCheckpoint intermediates (iterative graph ops
-    // persist one RDD per round); nothing unpersists them once the query's
-    // DataFrame is discarded, and the ContextCleaner only reclaims them on
-    // a GC the large heap rarely triggers. Left alone, ~hundreds of runs
-    // accumulate tens of GiB in the block manager and the whole suite
-    // degrades into eviction/GC thrash (round 10: medians 3x, and the
-    // post-suite "isolated" rerun of d64 SLOWER than its contended run).
-    // Dropping the persisted blocks between runs is safe — each run builds
-    // a fresh plan — and makes every measurement start from the same
-    // block-manager state.
-    // blocking=true: an async unpersist races the NEXT measured run (its
-    // block removals and the run's block registrations interleave in the
-    // block manager) — measured on d34: 6 reps grew 4.4 -> 11.6 s with
-    // async drops and held ~2-4 s with blocking ones
-    def dropPersisted(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
     // (name, median, firstRun)
     val results = selected.map { case (name, fn) =>
       // one untimed run at the TARGET sf first: the sf0.001 warmup pass
@@ -120,7 +53,7 @@ object Bench {
       // a GC the large heap rarely runs, and allocation-heavy UDF queries
       // (d72's per-row gzip) otherwise measure the whole suite's heap
       // debris — d72 ran 8.6 s late in the full suite vs 1.5 s alone.
-      dropPersisted()
+      EngineSession.dropPersisted(spark)
       System.gc()
       try fn(spark, sfDir).count() catch { case _: Throwable => () }
       // verbose-only attribution: how much of the rep was JVM GC, and how
@@ -133,7 +66,7 @@ object Bench {
           .asScala.map(_.getCollectionTime).sum
       }
       val times = (1 to reps).map { rep =>
-        dropPersisted()
+        EngineSession.dropPersisted(spark)
         val gc0 = if (verbose) gcMillis() else 0L
         val t0 = System.nanoTime()
         val t = try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
@@ -174,7 +107,7 @@ object Bench {
     val top = results.sortBy(-_._2).take(10).map(r => (r._1, r._2))
     val isolated = top.collect { case (name, v) if v >= 0 =>
       val fn = SparkEntry.queries(name)
-      dropPersisted()
+      EngineSession.dropPersisted(spark)
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count(); name -> (System.nanoTime() - t0) / 1e9 }
       catch { case _: Throwable => name -> -1.0 }

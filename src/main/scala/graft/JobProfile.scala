@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB wall-time profiler for a single query: runs the named query
   * `SPARK_GRAFT_PROFILE_REPS` (default 3) times and prints every Spark
@@ -14,23 +13,8 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: JobProfile <queryName> [more...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROFILE_REPS", "3").toInt
-    val spark = graft.io.NioLocalFs.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match Bench's AQE coalesce floor (see Bench.scala)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "64k"))
-      // generated-code cache sized for a many-query engine run (see
-      // Bench.scala) — static conf, mirrored so every main runs the
-      // identical engine configuration
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE_ENTRIES", "8192"))
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.geo.GeoFunctions.ensureRegistered(spark)
+    val spark = EngineSession.start("graft-jobprofile")
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
@@ -63,8 +47,7 @@ object JobProfile {
     args.toSeq.foreach { name =>
       val fn = SparkEntry.queries(name)
       (1 to reps).foreach { rep =>
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+        EngineSession.dropPersisted(spark)
         System.err.println(s"==== $name rep $rep ====")
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()

@@ -11,37 +11,13 @@ import org.apache.spark.sql.SparkSession
 object LeakProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val tmp = sys.env.getOrElse("SPARK_GRAFT_TMPDIR",
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-bench"
-      else System.getProperty("java.io.tmpdir"))
-    new java.io.File(tmp).mkdirs()
-    System.setProperty("java.io.tmpdir", tmp)
-    val spark = graft.io.NioLocalFs.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "64k"))
-      // generated-code cache sized for a many-query engine run (see
-      // Bench.scala) — static conf, mirrored so every main runs the
-      // identical engine configuration
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE_ENTRIES", "8192"))
-      .config("spark.local.dir", tmp)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.geo.GeoFunctions.ensureRegistered(spark)
+    val spark = EngineSession.start("graft-leakprobe", scratch = true)
+    val tmp = spark.sparkContext.getConf.get("spark.local.dir")
     val streamQ = args.lift(0).getOrElse("s22_stream_pmi")
     val batchQ = args.lift(1).getOrElse("d10_corpus_clean")
     val rounds = args.lift(2).map(_.toInt).getOrElse(8)
     val sfn = SparkEntry.queries(streamQ)
     val bfn = SparkEntry.queries(batchQ)
-    def dropPersisted(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
     def dirBytes(d: java.io.File): Long =
       if (!d.exists()) 0L
       else if (d.isFile) d.length()
@@ -66,7 +42,7 @@ object LeakProbe {
       println(f"[probe] $label%-12s heapMB=$used%5d views=$views providers=$providers tmpMB=$shm")
     }
     def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      dropPersisted()
+      EngineSession.dropPersisted(spark)
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
       (System.nanoTime() - t0) / 1e9

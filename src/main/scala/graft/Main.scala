@@ -127,22 +127,9 @@ object Main {
     case Left(err) =>
       System.err.println(s"[main] error: $err"); System.err.println(usage); 2
     case Right(args) =>
-      val spark = graft.io.NioLocalFs.configure(SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-        .config("spark.sql.session.timeZone", "UTC")
-        // one update compiles ~160 distinct generated classes; Spark's
-        // default 100-entry cache evicts them before the next forecast
-        // reuses them (same fixed size as Bench and Verify)
-        .config("spark.sql.codegen.cache.maxEntries", "8192")
-        .appName("graft-pipeline"))
-        .getOrCreate()
-      spark.sparkContext.setLogLevel(args.logLevel match {
-        case "DEBUG" => "DEBUG"; case "INFO" => "INFO"; case "WARNING" => "WARN"
-        case "ERROR" => "ERROR"; case other => other
+      val spark = EngineSession.start("graft-pipeline", args.logLevel match {
+        case "WARNING" => "WARN"; case other => other
       })
-      graft.geo.GeoFunctions.ensureRegistered(spark)
       val store = new DataStore(args.root)
       try {
         val ok = args.mode match {

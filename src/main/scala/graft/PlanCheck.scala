@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for selected queries — the
   * scale-readiness review loop (pushdown, pruning, broadcast, shuffle
   * count). Usage: runMain graft.PlanCheck [queryName ...] */
 object PlanCheck {
   def main(args: Array[String]): Unit = {
-    val spark = graft.io.NioLocalFs.configure(SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.geo.GeoFunctions.ensureRegistered(spark)
+    val spark = EngineSession.start("graft-plancheck")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val names = if (args.nonEmpty) args.toSeq else Seq("q01_pricing_summary", "q02_filter_project")
     names.foreach { n =>

@@ -17,20 +17,12 @@ import org.apache.spark.sql.functions._
 object ScaleBench {
   def main(args: Array[String]): Unit = {
     val nTiles = sys.env.getOrElse("SPARK_GRAFT_TILES", "1000000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // optional args = substring filters over metric names, so one shape can
     // be re-measured without paying for the whole suite
     def sel(name: String): Boolean = args.isEmpty || args.exists(name.contains)
     val dimV = 64
-    val spark = graft.io.NioLocalFs.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.geo.GeoFunctions.ensureRegistered(spark)
+    val cpus = EngineSession.cores
+    val spark = EngineSession.start("graft-scalebench")
 
     if (sel("probability_join")) {
       // size a bbox to ~nTiles zoom-14 tiles (square-ish)
@@ -39,7 +31,7 @@ object ScaleBench {
       val (minLon, minLat) = (-72.0, 10.0)
       val tiles = TileUniverse.generate(spark, 14,
         minLon, minLat, minLon + side * degPerTile, minLat + side * degPerTile * 0.8)
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
 
       val envs = SyntheticScenario.envelopes(spark, members = 51,
         thresholds = Constants.WindThresholds.take(5),
@@ -67,7 +59,7 @@ object ScaleBench {
         (col("id") % 89).cast("double").as("radius_34_knot_winds_se_km"),
         (col("id") % 83).cast("double").as("radius_34_knot_winds_sw_km"),
         (col("id") % 79).cast("double").as("radius_34_knot_winds_nw_km"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
       val t1 = System.nanoTime()
       val wf = graft.ops.Tracks.withWindFields(pts)
       val nPolys = wf.filter(col("wind_field_polygon_34kt").isNotNull).count()
@@ -117,7 +109,7 @@ object ScaleBench {
       val docs = spark.range(nDocs).select(col("id"),
         concat_ws(" ", (0 until 30).map(j =>
           concat(lit(s"w$j"), ((col("id") * (j + 7)) % 1000).cast("string"))): _*).as("text"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
       val t3 = System.nanoTime()
       val nSigs = docs
         .select(graft.llm.Dedup.minhashSignature(col("text"), 5, 64).as("sig"))
@@ -134,7 +126,7 @@ object ScaleBench {
       val lefts = spark.range(nEvents).select(
         (col("id") % 100000).as("k"), col("id").as("lid"),
         ((col("id") * 37L) % 1000000000L).as("lt"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
       val rights = spark.range(nEvents / 8).select(
         (col("id") % 100000).as("k"), col("id").as("rid"),
         ((col("id") * 293L) % 1000000000L).as("rt"))
@@ -163,7 +155,7 @@ object ScaleBench {
       val lshDocs = spark.range(nLshDocs).select(col("id"), base)
         .select(col("id"), concat_ws(" ", (0 until 30).map(j =>
           concat(lit(s"w$j"), ((col("b") * 31 + j) * 2654435761L).cast("string"))): _*).as("text"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
       val t5 = System.nanoTime()
       val nPairs = graft.llm.Dedup.minhashLsh(lshDocs, "id", minEstJaccard = 0.5)
         .agg(count(lit(1))).head().getLong(0)
@@ -197,7 +189,7 @@ object ScaleBench {
                 .cast("long").*(2654435761L).cast("string"))): _*),
             lit(" tail"), col("id").cast("string")))
           .as("text"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
       val cap = 1000
       val maxBucket = graft.llm.Dedup.bandedSignatures(docs, "id")
         .groupBy("band", "bucket").agg(count(lit(1)).as("c"))
@@ -234,7 +226,7 @@ object ScaleBench {
         concat_ws(" ", (0 until 30).map(j =>
           concat(lit(s"w$j"), (base * 31 + j) * 2654435761L cast "string")): _*)
       val train = spark.range(nDocs).select(col("id"),
-        corpusText(col("id")).as("text")).repartition(cpus.toInt * 4)
+        corpusText(col("id")).as("text")).repartition(cpus * 4)
       // eval doc e paraphrases train doc e*17 (never shares text verbatim:
       // the last word is replaced) — fuzzy must still flag it
       val eval_ = spark.range(nEval).select(
@@ -271,7 +263,7 @@ object ScaleBench {
         ((col("id") * 1099511628211L) % nVerts).as("dst"))
       val path = spark.range(pathLen).select(
         (col("id") + nVerts).as("src"), (col("id") + nVerts + 1).as("dst"))
-      val edges = rand.unionByName(path).repartition(cpus.toInt * 4)
+      val edges = rand.unionByName(path).repartition(cpus * 4)
       val t6 = System.nanoTime()
       val lbl = graft.ops.ConnectedComponents.labels(edges, "src", "dst")
       val cc = lbl.agg(count(lit(1)).as("n"), countDistinct(col("component")).as("c")).head()
@@ -290,7 +282,7 @@ object ScaleBench {
       val vecs = spark.range(nVecs).select(col("id").as("vec_id"),
         transform(sequence(lit(0), lit(dimV - 1)),
           j => sin((col("id") % 100000) * (j + 1) * 0.0001).cast("float")).as("embedding"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
         .localCheckpoint(false)
       val qs10 = vecs.filter(col("vec_id") < 10)
       val t7 = System.nanoTime()
@@ -323,7 +315,7 @@ object ScaleBench {
         transform(sequence(lit(0), lit(dimV - 1)), j =>
           (sin((col("id") % clusters) * (j + 3) * 0.37) +
             sin(col("id") * (j + 1) * 0.0001) * 0.05).cast("float")).as("embedding"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
         .localCheckpoint(false)
       val t0nn = System.nanoTime()
       val g = graft.llm.NnDescent.knnGraph(vecs, k = 5, iterations = 3)
@@ -353,7 +345,7 @@ object ScaleBench {
             (pmod(xxhash64(col("b"), j), lit(1000L)).cast("double") / 500.0 - 1.0 +
               when(col("id") >= nRsBase && j === lit(0), lit(0.001))
                 .otherwise(lit(0.0))).cast("float")).as("embedding"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
         .localCheckpoint(false)
       val rsQueries = rsVecs.filter(col("vec_id") < 100)
       val tRs = System.nanoTime()
@@ -393,7 +385,7 @@ object ScaleBench {
             (pmod(xxhash64(col("b"), j), lit(1000L)).cast("double") / 500.0 - 1.0 +
               when(col("id") >= nSemBase && j === lit(0), lit(0.001))
                 .otherwise(lit(0.0))).cast("float")).as("embedding"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
         .localCheckpoint(false)
       val t9 = System.nanoTime()
       val semDropped = graft.llm.Dedup.semanticDedupLsh(semVecs, "vec_id",
@@ -418,7 +410,7 @@ object ScaleBench {
         .map { case (a, b) =>
           spark.range(nPrVerts).select(col("id").as("src"),
             ((col("id") * a + b) % nPrVerts).as("dst"))
-        }.reduce(_.unionByName(_)).repartition(cpus.toInt * 4)
+        }.reduce(_.unionByName(_)).repartition(cpus * 4)
       val t10 = System.nanoTime()
       val prStats = graft.ops.Graph.pageRank(prEdges, iterations = 5)
         .agg(count(lit(1)).as("n"), sum(col("r")).as("mass")).head()
@@ -441,7 +433,7 @@ object ScaleBench {
             concat(lit("t"), (((col("b") * 31 + j) * 2654435761L) % 1000000L +
               when(col("id") >= snmBase && j === lit(0), lit(1L)).otherwise(lit(0L)))
               .cast("string"))).as("toks"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
       val t11 = System.nanoTime()
       val nSnmPairs = graft.llm.Dedup.sortedNeighborhoodPairs(snmRows, "id",
           col("bkey"), "toks", window = 4, minJaccard = 0.8)
@@ -459,7 +451,7 @@ object ScaleBench {
       val skyRows = spark.range(nSky).select(col("id"),
         ((col("id") * 2654435761L) % 1000000L).as("x"),
         ((col("id") * 40503L + 7L) % 1000000L).as("y"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
       val t12 = System.nanoTime()
       val nFrontier = graft.ops.Skyline.pareto2d(skyRows, "x", "y", buckets = 256)
         .agg(count(lit(1))).head().getLong(0)
@@ -476,7 +468,7 @@ object ScaleBench {
         concat(lit("s"), (col("id") % 16).cast("string")).as("shard"),
         // consecutive shards share half their value range
         ((col("id") % 16) * 500000L + (expr("id div 16") % 1000000L)).as("v"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
       val t13 = System.nanoTime()
       val nOverlaps = graft.ops.Kmv.shardOverlap(kmvRows, "shard", "v", k = 256)
         .agg(count(lit(1)), sum(col("both_k"))).head()
@@ -496,7 +488,7 @@ object ScaleBench {
       val spanDocs = spark.range(nSpanDocs).select(col("id"), spanBase)
         .select(col("id"), concat_ws(" ", (0 until 30).map(j =>
           concat(lit(s"w$j"), ((col("b") * 31 + j) * 2654435761L).cast("string"))): _*).as("text"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
       val t14 = System.nanoTime()
       val spanOut = graft.llm.Dedup.removeDuplicateSpans(spanDocs, "id",
           chunkTokens = 5)
@@ -522,7 +514,7 @@ object ScaleBench {
           ((col("id") * 7 + 1) % nLpV).as("dst")))
         .union(spark.range(nLpV).select(col("id"),
           ((col("id") * 41 + 19) % nLpV).as("dst")))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
       val t15 = System.nanoTime()
       val lp = graft.ops.Graph.labelPropagation(lpEdges, rounds = 3,
           localThreshold = 0)
@@ -623,7 +615,7 @@ object ScaleBench {
           (col("id") * 7 % 1000000L).as("v"),
           (col("id") + 1000L).as("ts"),
           when(col("id") % 17 === 0, "D").otherwise("U").as("op"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
       val t17 = System.nanoTime()
       val hist = graft.ops.Cdc.applyChangesetScd2(scdBase, scdCh,
           Seq("k"), Seq("v"), "ts", "op")
@@ -650,7 +642,7 @@ object ScaleBench {
           ((col("id") * 41 + 19) % nSsV).as("dst")))
         .select(col("src"), col("dst"),
           ((col("src") * 7 + col("dst") * 3) % 20 + 1).as("w"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
       val t16 = System.nanoTime()
       val ss = graft.ops.Graph.shortestPaths(ssEdges,
           spark.range(3).select((col("id") + 1).as("v")), maxRounds = 8,
@@ -713,7 +705,7 @@ object ScaleBench {
           when(col("v") === sccEnd, sccStart).otherwise(col("v") + 1).as("dst"))
         .union(sccV.filter(col("v") % 8 === 0 && col("v") > 0)
           .select(lit(0L).as("src"), col("v").as("dst")))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
       val t18 = System.nanoTime()
       val scc = graft.ops.Graph.stronglyConnectedComponents(sccEdges,
         localThreshold = 0)
@@ -735,7 +727,7 @@ object ScaleBench {
       val vvK = spark.range(full).select(col("id").as("v"),
           expr("id div 8").as("b"), (col("id") % 8).as("p"),
           expr("3 + (id div 8) % 6").as("m"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
       val clK = vvK.filter(col("p") < col("m"))
       val cliqueE = clK.select(col("b"), col("p").as("p1"), col("v").as("src"))
         .join(clK.select(col("b"), col("p").as("p2"), col("v").as("dst")), Seq("b"))
@@ -771,7 +763,7 @@ object ScaleBench {
       val dfU = spark.range(nU)
         .select(element_at(arrU, (col("id") % wordsU.size).cast("int") + 1)
           .as("word"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
       val tU = System.nanoTime()
       val segU = graft.llm.Unigram.segmentWords(dfU, "word", vocabU)
         .agg(sum(col("cost")), sum(col("n_pieces")), count(lit(1))).head()
@@ -803,7 +795,7 @@ object ScaleBench {
       val blocks = (nLp / 5)
       val vLp = spark.range(blocks * 5).select(col("id").as("v"),
           expr("id div 5").as("b"), (col("id") % 5).as("p"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
       val starE = vLp.filter(col("p") > 0)
         .select((col("b") * 5).as("src"), col("v").as("dst"))
       val tLp = System.nanoTime()
@@ -832,7 +824,7 @@ object ScaleBench {
             col("id").cast("string"), lit(" mid alpha beta gamma")))
             .otherwise(concat(lit("pad"), col("id").cast("string"),
               lit(" filler"), (col("id") % 13).cast("string"))).as("text"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
         .localCheckpoint(false)
       val tPs = System.nanoTime()
       val hits = graft.llm.PhraseSearch.search(
@@ -858,7 +850,7 @@ object ScaleBench {
       val nH = math.min(nTiles * 2, 2000000L)
       val hNodes = spark.range(1, nH + 1).select(col("id").as("v"))
         .withColumn("value", col("v"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
       val hEdges = hNodes.filter(col("v") >= 2)
         .select(col("v").as("child"), expr("v div 2").as("parent"))
       val tH = System.nanoTime()
@@ -892,7 +884,7 @@ object ScaleBench {
           concat(lit("s"), col("id") % 4).as("source"),
           concat(lit("w"), col("id")).as("w"),
           (col("id") % 7 + 1).as("c"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
         .localCheckpoint()
       val t17 = System.nanoTime()
       val ent = graft.llm.TextAnalysis.unigramEntropy(counts)
@@ -936,7 +928,7 @@ object ScaleBench {
             element_at(lit(wordArr.toArray),
               (pmod(xxhash64(col("id"), lit(j)), lit(400)) + 1).cast("int"))): _*)
             .as("text"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
         .localCheckpoint(false)
       val t18 = System.nanoTime()
       val pieces = graft.llm.WordPiece.pieceCounts(docs, "text", vocab)
@@ -967,7 +959,7 @@ object ScaleBench {
               element_at(patArr, ((col("id") / 5) % 200 + 1).cast("int")),
               lit(" " + filler)))
             .otherwise(lit(filler + " " + filler)).as("text"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
         .localCheckpoint(false)
       val t19 = System.nanoTime()
       val screened = docs.select(col("id"),
@@ -1000,7 +992,7 @@ object ScaleBench {
         element_at(lit(vocabArr), (pmod(xxhash64(col("id"), lit(j)), lit(200)) + 1).cast("int")))
       val docs2 = spark.range(nDocs2)
         .select(col("id").as("doc_id"), concat_ws(" ", mk: _*).as("text"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
         .localCheckpoint(false)
       val t20 = System.nanoTime()
       val model = graft.llm.TextAnalysis.kneserNeyBigram(
@@ -1031,7 +1023,7 @@ object ScaleBench {
         .select((col("id") * 2654435761L % n).as("k0"), col("id"))
         .groupBy("k0").agg(min("id").as("key")) // dedup collisions of the mult hash
         .select(col("key"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
         .localCheckpoint(false)
       val nDistinct = perm.count()
       val t21 = System.nanoTime()

@@ -3,21 +3,13 @@ package graft
 import graft.geo.Geo
 import graft.io.DataStore
 import graft.pipeline.{Jobs, SyntheticScenario}
-import org.apache.spark.sql.SparkSession
 
 /** Local smoke runner: exercises SparkEntry.entry the way the driver does
   * (rows > 0) plus the full initialize→update pipeline lifecycle on a temp
   * DataStore, printing the produced views and report keys. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = graft.io.NioLocalFs.configure(SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.geo.GeoFunctions.ensureRegistered(spark)
+    val spark = EngineSession.start("graft-smoke")
 
     // 1. flagship entry
     val df = SparkEntry.entry(spark)

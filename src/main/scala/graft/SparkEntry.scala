@@ -35,8 +35,8 @@ object SparkEntry {
       // (legacy conf) and we truncate to micros exactly like DuckDB's
       // nanos→micros read, and TIMESTAMP(MICROS) without UTC adjustment,
       // which arrives as TIMESTAMP_NTZ and only needs the session-UTC cast.
-      // Adapt on the observed schema so both vintages read identically.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // Adapt on the observed schema so both vintages read identically
+      // (the legacy conf is part of the engine profile, graft.EngineSession).
       val raw = spark.read.parquet(s"$dir/$name.parquet")
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
@@ -238,13 +238,6 @@ object SparkEntry {
       StructField("event_id", LongType), StructField("ts", tsType),
       StructField("user_id", LongType), StructField("event_type", StringType),
       StructField("value", DoubleType), StructField("props", StringType)))
-  }
-
-  /** State-sized sibling session with the TIMESTAMP(NANOS) read conf. */
-  private def statefulEventsSession(s: SparkSession): SparkSession = {
-    val ss = graft.streaming.Streaming.statefulSession(s)
-    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ss
   }
 
   /** events.parquet as a micro-timestamped file stream on `ss`. */
@@ -1138,7 +1131,7 @@ object SparkEntry {
       // the emission rule in closed SQL — an off-by-one in ANY of them
       // breaks the hash.
       import org.apache.spark.sql.types._
-      val ss = statefulEventsSession(s)
+      val ss = graft.streaming.Streaming.statefulSession(s)
       val ev = t(ss, d, "events")
         .select(col("event_id"), col("ts"), col("event_type"))
       val cut = col("ts") < expr("timestamp'2024-01-16 00:00:00'")
@@ -1170,7 +1163,7 @@ object SparkEntry {
       // with Trigger.AvailableNow — must converge to the batch answer (the
       // DuckDB oracle computes the batch equivalent)
       val agg = graft.streaming.Streaming.windowedEventCounts(
-        eventsStream(statefulEventsSession(s), d))
+        eventsStream(graft.streaming.Streaming.statefulSession(s), d))
       graft.streaming.Streaming.runAvailableNow(agg, s"s01_win_${System.nanoTime()}")
         .select(to_date(col("window_start")).as("day"), col("event_type"), col("n"),
           round(col("total"), 2).as("total"))
@@ -1183,7 +1176,7 @@ object SparkEntry {
       // tuple per open bar — bounded by bars, not ticks — and the
       // watermark finalizes them. Shares q89's oracle: the stream must
       // converge to the batch bars bit-for-bit.
-      val stream = eventsStream(statefulEventsSession(s), d)
+      val stream = eventsStream(graft.streaming.Streaming.statefulSession(s), d)
       val bars = graft.streaming.Streaming.ohlcBarsStream(
         stream, Seq("event_type"))
       graft.streaming.Streaming.runAvailableNow(
@@ -1195,7 +1188,7 @@ object SparkEntry {
     "s02_stream_dedup" -> ((s, d) => {
       // §2.8 exactly-once dedup as a stream: first-seen (user_id, event_type)
       // pairs against checkpointed state — must converge to batch DISTINCT
-      val stream = eventsStream(statefulEventsSession(s), d)
+      val stream = eventsStream(graft.streaming.Streaming.statefulSession(s), d)
       val deduped = graft.streaming.Streaming.dedupedStream(
         stream, Seq("user_id", "event_type"))
       graft.streaming.Streaming.runAvailableNow(
@@ -1209,7 +1202,7 @@ object SparkEntry {
       // during the run and the converged output equals batch DISTINCT —
       // s20 shares s02's oracle; the re-emission-after-expiry semantics
       // is StreamingSpec's three-drop case.
-      val stream = eventsStream(statefulEventsSession(s), d)
+      val stream = eventsStream(graft.streaming.Streaming.statefulSession(s), d)
       val deduped = graft.streaming.Streaming.dedupedStreamBounded(
         stream, Seq("user_id", "event_type"), "ts", "90 days")
       graft.streaming.Streaming.runAvailableNow(
@@ -1715,13 +1708,13 @@ object SparkEntry {
     "g08_strategy_join" -> ((s, d) => {
       // the custom planner path: plain join(st_intersects) planned as
       // BroadcastSpatialJoinExec (graft.plans.SpatialJoinStrategy); result
-      // hash-checked against the same interval-arithmetic oracle as g01
-      graft.geo.GeoExpressions.register(s)
-      if (!s.experimental.extraStrategies.contains(graft.plans.SpatialJoinStrategy))
-        s.experimental.extraStrategies =
-          s.experimental.extraStrategies :+ graft.plans.SpatialJoinStrategy
-      val tiles = geoTiles(s, d).select(col("tile_id"), col("geometry").as("tgeom"))
-      val envs = geoEnvelopes(s, d).select(col("wind_threshold"), col("geometry").as("egeom"))
+      // hash-checked against the same interval-arithmetic oracle as g01.
+      // Planned on a sibling session of its own, so the strategy stays out
+      // of the caller's planner (`t` registers the functions there).
+      val ss = s.newSession()
+      ss.experimental.extraStrategies = Seq(graft.plans.SpatialJoinStrategy)
+      val tiles = geoTiles(ss, d).select(col("tile_id"), col("geometry").as("tgeom"))
+      val envs = geoEnvelopes(ss, d).select(col("wind_threshold"), col("geometry").as("egeom"))
       tiles.join(envs, call_function("st_intersects", col("tgeom"), col("egeom")))
         .groupBy(col("tile_id"), col("wind_threshold"))
         .agg(count(lit(1)).as("n_members"))
@@ -1911,7 +1904,7 @@ object SparkEntry {
       // STREAM-STREAM interval join: purchases stream x events stream, same
       // user, event in (t0, t0+2h] — watermarked state on both sides, must
       // converge to the batch inequality join (the q32 pair set)
-      val ss = statefulEventsSession(s)
+      val ss = graft.streaming.Streaming.statefulSession(s)
       def stream() = eventsStream(ss, d)
       val purchases = stream().filter(col("event_type") === "purchase")
         .select(col("user_id"), col("event_id").as("p_event_id"), col("ts").as("pts"))
@@ -1931,7 +1924,7 @@ object SparkEntry {
       // transitionStream contract), Update-mode emission. The max-n_seen
       // row per key is the live value; the converged fold must equal
       // the batch operator bit-for-bit (shares q91's oracle).
-      val ss = statefulEventsSession(s)
+      val ss = graft.streaming.Streaming.statefulSession(s)
       import ss.implicits._
       val ev = eventsStream(ss, d)
         .select(col("user_id"), unix_micros(col("ts")).as("us"),
@@ -1956,7 +1949,7 @@ object SparkEntry {
       // margin — so the stream output is deterministic and must equal
       // the batch LEFT JOIN exactly; nulls surface as −1 (the
       // COALESCE-before-hash contract).
-      val ss = statefulEventsSession(s)
+      val ss = graft.streaming.Streaming.statefulSession(s)
       def stream() = eventsStream(ss, d)
       val purchases = stream().filter(col("event_type") === "purchase")
         .select(col("user_id"), col("event_id").as("p_event_id"), col("ts").as("pts"))
@@ -2109,7 +2102,7 @@ object SparkEntry {
       // state, driven to completion — must converge to the batch
       // gaps-and-islands answer (merge while gap < 2 h)
       val sess = graft.streaming.Streaming.sessionWindowedCounts(
-        eventsStream(statefulEventsSession(s), d), Seq("user_id"), gap = "2 hours")
+        eventsStream(graft.streaming.Streaming.statefulSession(s), d), Seq("user_id"), gap = "2 hours")
       graft.streaming.Streaming.runAvailableNow(sess, s"s04_sess_${System.nanoTime()}")
         .select(col("user_id"), col("session_start"), col("n"),
           round(col("total"), 2).as("total"))
@@ -3245,7 +3238,7 @@ object SparkEntry {
       // customer dimension on user key, rolled up per market segment in
       // exact integer cents. The update-mode final state must equal the
       // one-shot batch join — the oracle is the plain SQL join+group.
-      val ss = statefulEventsSession(s)
+      val ss = graft.streaming.Streaming.statefulSession(s)
       val ev = eventsStream(ss, d)
         .select(col("user_id"), round(col("value") * 100).cast("long").as("cents"))
       val dim = t(ss, d, "customer")
@@ -4422,7 +4415,7 @@ object SparkEntry {
       // state machine per user (flatMapGroupsWithState, Update mode),
       // advanced in event-time order; the most-progressed row per user is
       // the final state. Same oracle SQL as q47.
-      val ss = statefulEventsSession(s)
+      val ss = graft.streaming.Streaming.statefulSession(s)
       import ss.implicits._
       val ev = eventsStream(ss, d)
         .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
@@ -4747,7 +4740,7 @@ object SparkEntry {
       // trend is bit-equal to batch whatever the microbatch layout was.
       // Same oracle as q56. The rational-derivation arithmetic happens on
       // the final state (post-sink), exactly like the batch finish.
-      val ss = statefulEventsSession(s)
+      val ss = graft.streaming.Streaming.statefulSession(s)
       val ev = eventsStream(ss, d)
         .filter(col("value").isNotNull && col("ts").isNotNull)
         .select(col("event_type"),
@@ -4773,7 +4766,7 @@ object SparkEntry {
       // user (O(users) state); emitted pairs are batch-counted after
       // AvailableNow. Same oracle as q58 — the streamed chain must
       // reproduce the batch lag bit for bit.
-      val ss = statefulEventsSession(s)
+      val ss = graft.streaming.Streaming.statefulSession(s)
       import ss.implicits._
       val ev = eventsStream(ss, d)
         // q58's null filter, applied BEFORE the typed decode: a null

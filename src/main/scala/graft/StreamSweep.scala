@@ -58,19 +58,7 @@ object StreamSweep {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val big = sys.env.getOrElse("SPARK_GRAFT_SWEEP_DIR", "/tmp/graft_sf1")
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_SWEEP_BUDGET_S", "180").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val tmp = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-sweep"
-      else System.getProperty("java.io.tmpdir")
-    new java.io.File(tmp).mkdirs()
-    System.setProperty("java.io.tmpdir", tmp)
-    val spark = graft.io.NioLocalFs.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", tmp)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.geo.GeoFunctions.ensureRegistered(spark)
+    val spark = EngineSession.start("graft-streamsweep", scratch = true)
 
     if (!new java.io.File(s"$big/lineitem.parquet").exists)
       ScaleSweep.buildScaled(spark, base, big, copies = 10)
@@ -78,22 +66,18 @@ object StreamSweep {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(_.startsWith("s"))
       .filter(n => args.isEmpty || args.exists(n.contains))
-    def dropPersisted(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    }
     def fmtState(s: Option[Long]): String = s.map(_.toString).getOrElse("-")
     println("query\tt_sf01_s\tt_sf1_s\tratio\tstate_sf01\tstate_sf1\tstate_ratio")
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
-      dropPersisted(); System.gc()
+      EngineSession.dropPersisted(spark); System.gc()
       ScaleSweep.timed(spark, fn, base, budgetS) // warm codegen/JIT
       graft.streaming.Streaming.checkpointLog.clear()
-      dropPersisted()
+      EngineSession.dropPersisted(spark)
       val tSmall = ScaleSweep.timed(spark, fn, base, budgetS)
       val stSmall = stateRows(spark)
       graft.streaming.Streaming.checkpointLog.clear()
-      dropPersisted(); System.gc()
+      EngineSession.dropPersisted(spark); System.gc()
       val tBig = ScaleSweep.timed(spark, fn, big, budgetS * 3)
       val stBig = stateRows(spark)
       graft.streaming.Streaming.checkpointLog.clear()

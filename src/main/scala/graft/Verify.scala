@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,30 +10,13 @@ object Verify {
     // comma-separated filters (local iteration; the driver always passes
     // exactly two args)
     val nameFilter = if (args.length > 2) Some(args(2).split(',').toSeq) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.io.NioLocalFs.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match Bench's AQE coalesce floor (see Bench.scala) so correctness
-      // runs execute the same plans the bench measures
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "64k"))
-      // generated-code cache sized for a many-query engine run (see
-      // Bench.scala) — static conf, mirrored so every main runs the
-      // identical engine configuration
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE_ENTRIES", "8192"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.geo.GeoFunctions.ensureRegistered(spark)
+    val spark = EngineSession.start("graft-verify")
     new java.io.File(outDir).mkdirs()
     // Run queries concurrently: each coalesce(1) write is a single-task
     // stage, so a sequential loop leaves cores idle most of the wall time.
     // SparkSession is thread-safe for concurrent job submission.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(2, cpus.toInt))
+      math.max(2, EngineSession.cores))
     val selected = nameFilter match {
       case Some(fs) => SparkEntry.queries.filter(q => fs.exists(q._1.contains))
       case None    => SparkEntry.queries

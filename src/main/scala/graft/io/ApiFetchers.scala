@@ -218,9 +218,12 @@ object ApiFetchers {
                       typeCol: String, rewrite: Boolean = false,
                       customPath: Option[String] = None)
                      (fetch: => DataFrame): DataFrame = {
-    val custom = customPath.filter(p => new java.io.File(p).exists()).map { p =>
-      CustomOverrides.loadPoints(spark, p, kind, idCol)
-    }
+    // through the path's own FileSystem: a file:// or s3a:// override is a
+    // URI, not a local file name
+    val custom = customPath.filter { p =>
+      val path = new org.apache.hadoop.fs.Path(p)
+      path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
+    }.map(p => CustomOverrides.loadPoints(spark, p, kind, idCol))
     custom match {
       case Some(df) =>
         store.writeParquet(df.drop("geometry"), cacheRel)

@@ -38,7 +38,6 @@ import org.apache.hadoop.fs.permission.FsPermission
   * `NioLocalFs` is the default checksummed `FileContext` binding over the
   * same raw FS (`fs.AbstractFileSystem.file.impl`). Layouts, `.crc`
   * siblings and rename semantics are byte-identical to stock Hadoop.
-  * Both are opt-out via SPARK_GRAFT_NIO_LOCAL_FS=0 in the mains.
   */
 class NioRawLocalFileSystem extends RawLocalFileSystem {
 
@@ -145,16 +144,11 @@ class NioLocalFs(uri: URI, conf: Configuration)
 
 object NioLocalFs {
   /** Bind the `file` scheme (FileSystem + FileContext APIs) to the
-    * shell-free local FS. Applied identically by every main so bench,
-    * verify and profiling run the same engine; opt out with
-    * SPARK_GRAFT_NIO_LOCAL_FS=0. Must be set at builder time — Hadoop
-    * caches FileSystem instances per scheme on first use. */
+    * shell-free local FS; [[graft.EngineSession]] applies it to every
+    * session. Must be set at builder time — Hadoop caches FileSystem
+    * instances per scheme on first use. */
   def configure(b: org.apache.spark.sql.SparkSession.Builder)
       : org.apache.spark.sql.SparkSession.Builder =
-    if (sys.env.get("SPARK_GRAFT_NIO_LOCAL_FS").contains("0")) b
-    else b
-      .config("spark.hadoop.fs.file.impl",
-        classOf[NioLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[NioLocalFs].getName)
+    b.config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
 }

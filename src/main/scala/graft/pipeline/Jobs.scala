@@ -63,14 +63,7 @@ object Jobs {
     val withIds = AdminOverlay.assign(
       Aggregations.nanToNull(tiles, Constants.TileDataCols), admins)
     store.writeParquet(withIds, s"mercator_views/${country}_$zoom.parquet")
-
-    // admin rollup (impact_analysis.py:1469-1502): sums + means keyed by the
-    // admin ucode in a column *named* tile_id (reference naming quirk)
-    val rolled = Aggregations.adminRollup(withIds.drop("tile_id", "geometry"), "id")
-      .withColumnRenamed("id", "tile_id")
-      .join(broadcast(admins.select(col("id").as("tile_id"), col("name"), col("geometry"))),
-        Seq("tile_id"), "left")
-    store.writeParquet(rolled, s"admin_views/${country}_admin1.parquet")
+    store.writeParquet(adminLayer(withIds, admins), s"admin_views/${country}_admin1.parquet")
 
     facilities.foreach { case (kind, df) =>
       store.writeParquet(df, s"${kind}_views/${country}_$kind.parquet")
@@ -101,12 +94,19 @@ object Jobs {
       store.writeParquet(withIds.select("tile_id", "id"),
         s"admin_views/${country}_admin${level}_tile_map.parquet")
     }
-    val rolled = Aggregations.adminRollup(withIds.drop("tile_id", "geometry"), "id")
-      .withColumnRenamed("id", "tile_id")
-      .join(broadcast(adminBoundaries.select(col("id").as("tile_id"), col("name"), col("geometry"))),
-        Seq("tile_id"), "left")
-    store.writeParquet(rolled, s"admin_views/${country}_admin$level.parquet")
+    store.writeParquet(adminLayer(withIds, adminBoundaries),
+      s"admin_views/${country}_admin$level.parquet")
   }
+
+  /** The admin-level layer (impact_analysis.py:1469-1502): the tiles'
+    * sums + means per region `id`, keyed by the region id in a column
+    * *named* tile_id (reference naming quirk), with the region's name and
+    * geometry from `boundaries` (id, name, geometry). */
+  private def adminLayer(withIds: DataFrame, boundaries: DataFrame): DataFrame =
+    Aggregations.adminRollup(withIds.drop("tile_id", "geometry"), "id")
+      .withColumnRenamed("id", "tile_id")
+      .join(broadcast(boundaries.select(col("id").as("tile_id"), col("name"), col("geometry"))),
+        Seq("tile_id"), "left")
 
   /** Admin levels with an initialized base parquet — these determine which
     * per-level storm views `update` produces
@@ -357,10 +357,9 @@ object Jobs {
       (if (d.columns.contains(c)) d.withColumn(c, coalesce(col(s"__new_$c"), col(c)))
        else d.withColumn(c, col(s"__new_$c"))).drop(s"__new_$c")
     }
-    val out = patched.cache()
-    out.count() // materialize before overwriting the file being read
+    // the temp copy is complete before the base it reads is removed
     val tmp = s"mercator_views/${country}_$zoom.parquet.__tmp__"
-    store.writeParquet(out, tmp)
+    store.writeParquet(patched, tmp)
     store.remove(s"mercator_views/${country}_$zoom.parquet")
     java.nio.file.Files.move(
       java.nio.file.Paths.get(store.path(tmp)),
@@ -369,21 +368,17 @@ object Jobs {
     // re-aggregate every initialized admin view (impact_analysis.py:1421-1454)
     initializedAdminLevels(store, country).foreach { level =>
       val adminRel = s"admin_views/${country}_admin$level.parquet"
-      val adminsGeom = store.readParquet(spark, adminRel).select("tile_id", "name", "geometry")
+      val boundaries = store.readParquet(spark, adminRel)
+        .select(col("tile_id").as("id"), col("name"), col("geometry"))
       val refreshed = store.readParquet(spark, s"mercator_views/${country}_$zoom.parquet")
       val withIds = if (level == 1) refreshed
-        else AdminOverlay.assign(refreshed.drop("id"),
-          adminsGeom.select(col("tile_id").as("id"), col("geometry")))
-      val rolled = Aggregations.adminRollup(withIds.drop("tile_id", "geometry"), "id")
-        .withColumnRenamed("id", "tile_id")
-        .join(broadcast(adminsGeom), Seq("tile_id"), "left")
+        else AdminOverlay.assign(refreshed.drop("id"), boundaries.select("id", "geometry"))
       val tmpA = adminRel + ".__tmp__"
-      store.writeParquet(rolled, tmpA)
+      store.writeParquet(adminLayer(withIds, boundaries), tmpA)
       store.remove(adminRel)
       java.nio.file.Files.move(
         java.nio.file.Paths.get(store.path(tmpA)),
         java.nio.file.Paths.get(store.path(adminRel)))
     }
-    out.unpersist()
   }
 }

@@ -5,15 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one per JVM). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    // shell-free local FS, same binding as every main (graft.io.NioLocalFs)
-    // so all suites exercise the engine's actual file scheme
-    val s = graft.io.NioLocalFs.configure(SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = EngineSession.init(
+    EngineSession.builder("graft-test", "local[4]", 4)
       // bucketed-table suites write managed tables; keep them out of the repo
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
@@ -22,12 +15,8 @@ object TestSpark {
       // production-partitioned input), so plan-shape budgets assert the
       // plan a real corpus gets. Results are spread-invariant; SpreadSpec
       // toggles this to cover the narrow-regime behaviour.
-      .config("spark.graft.spread", "false"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.geo.GeoFunctions.ensureRegistered(s)
-    s
-  }
+      .config("spark.graft.spread", "false")
+      .getOrCreate(), "WARN")
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -160,4 +160,20 @@ class ApiFetchersSpec extends SparkSpec {
     assert(custom.count() == 2)
     assert(store.readParquet(spark, "hc_views/FJI_health_centers.parquet").count() == 2)
   }
+
+  test("a custom override given as a file:// URI is read, not skipped") {
+    val tmp = java.nio.file.Files.createTempDirectory("apifetch-uri")
+    val store = new DataStore(tmp.toString)
+    val csv = tmp.resolve("FJI_schools.csv")
+    java.nio.file.Files.writeString(csv,
+      "latitude,longitude,amenity\n-17.8,177.4,school\n-18.1,178.4,school\n-16.9,179.0,school\n")
+    val custom = ApiFetchers.fetchFacilities(spark, store, "schools", "FJI",
+      "school_views/FJI_schools.parquet", "osm_id", "amenity",
+      customPath = Some(csv.toUri.toString)) {
+      fail("custom present: fetch must not run"): org.apache.spark.sql.DataFrame
+    }
+    assert(csv.toUri.toString.startsWith("file:/"))
+    assert(custom.count() == 3)
+    assert(store.readParquet(spark, "school_views/FJI_schools.parquet").count() == 3)
+  }
 }

@@ -1,15 +1,22 @@
 package graft.plans
 
-import graft.SparkSpec
-import graft.geo.{Geo, GeoExpressions, GeoFunctions}
+import graft.{SparkSpec, TestSpark}
+import graft.geo.{Geo, GeoFunctions}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 class SpatialJoinStrategySpec extends SparkSpec {
 
-  import spark.implicits._
+  // the strategy goes on a sibling session of this spec's own, so the
+  // shared session's planner stays as every other suite expects it
+  override lazy val spark: SparkSession = {
+    val s = TestSpark.spark.newSession()
+    GeoFunctions.ensureRegistered(s)
+    s.experimental.extraStrategies = Seq(SpatialJoinStrategy)
+    s
+  }
 
-  GeoExpressions.register(spark)
-  spark.experimental.extraStrategies = Seq(SpatialJoinStrategy)
+  import spark.implicits._
 
   private def boxes(n: Int, seed: Int, pfx: String) = {
     val rng = new scala.util.Random(seed)
