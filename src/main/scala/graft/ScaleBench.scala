@@ -76,7 +76,6 @@ object ScaleBench {
       val rowsPerFile = 500
       val rtRoot = java.nio.file.Files.createTempDirectory("graft_rt_scale").toString
       val store = new graft.io.DataStore(rtRoot)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$rtRoot/admin_impact_views"))
       // three header groups: full metrics, no-facilities, population-only
       val headers = Seq(
         "tile_id,E_population,E_built_surface_m2,E_num_schools,probability",
@@ -89,8 +88,7 @@ object ScaleBench {
         val body = (0 until rowsPerFile).map { r =>
           (Seq(s"t$r") ++ (1 to nCols).map(c => ((r * c) % 1000).toString)).mkString(",")
         }.mkString("\n")
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$rtRoot/admin_impact_views/$name"), h + "\n" + body)
+        store.writeText(s"admin_impact_views/$name", h + "\n" + body)
       }
       val t2 = System.nanoTime()
       val discovered = graft.io.RelatedTable.discover(store)

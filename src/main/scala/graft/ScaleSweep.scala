@@ -1,5 +1,7 @@
 package graft
 
+import graft.io.StoreFs
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -52,6 +54,8 @@ object ScaleSweep {
     val usr = stride("events", "user_id")
     val doc = stride("documents", "doc_id")
     val vec = stride("embeddings", "vec_id")
+    val outDir = new Path(out)
+    val fs = StoreFs.of(outDir, spark)
     val shifts: Map[String, Seq[(String, Long)]] = Map(
       "region" -> Nil, "nation" -> Nil,
       "customer" -> Seq("c_custkey" -> cust),
@@ -70,16 +74,8 @@ object ScaleSweep {
       // gates read tables via file-stream globs (glob matches leaf FILES,
       // so a directory-style table silently streams zero batches). Batch
       // scans still parallelize by row group (maxPartitionBytes splits).
-      val stage = s"$out/_stage_$table"
-      scaled.coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .find(_.getName.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(s"no part file under $stage"))
-      val dest = java.nio.file.Paths.get(out, s"$table.parquet")
-      java.nio.file.Files.deleteIfExists(dest)
-      java.nio.file.Files.move(part.toPath, dest)
-      new java.io.File(stage).listFiles().foreach(_.delete())
-      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(stage))
+      StoreFs.publishFile(fs, new Path(outDir, s"$table.parquet"))(tmp =>
+        scaled.coalesce(1).write.mode("overwrite").parquet(tmp.toString))
       System.err.println(s"[sweep] built $table x${if (idCols.isEmpty) 1 else copies}")
     }
   }

@@ -14,9 +14,10 @@ import org.apache.spark.sql.types._
  * so a miswired fact-table call loud-fails instead of OOMing.
  *
  * Two implementations:
- *  - [[ParquetControlBackend]] (default): one parquet file per table under
- *    the store root, atomic replace via tmp + move — the layout every
- *    round so far shipped.
+ *  - [[ParquetControlBackend]] (default): one parquet table per name under
+ *    the store root, on the root's Hadoop file system (so under any root
+ *    URI the store takes); replace writes a temp table and renames it into
+ *    place.
  *  - [[JdbcControlBackend]]: the same contract over ANY JDBC warehouse via
  *    `spark.read/write.jdbc` — the seam the reference's warehouse session
  *    occupies. Spec'd against an in-process embedded Derby endpoint
@@ -37,32 +38,23 @@ trait ControlBackend {
   def append(df: DataFrame, rel: String): Unit
 }
 
-/** Parquet control tables under `root` — tmp-write + move so a reader (or
-  * a crash) never sees a half-written table. */
-final class ParquetControlBackend(root: String) extends ControlBackend {
-  private def p(rel: String): String = s"$root/$rel"
+/** Parquet control tables under the store's root, through the root's file
+  * system. `replace` writes the new table into a hidden temp directory,
+  * then deletes the old one and renames the temp into its place, so a reader
+  * never sees a half-written table. */
+final class ParquetControlBackend(store: DataStore) extends ControlBackend {
 
-  def exists(spark: SparkSession, rel: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(p(rel)))
+  def exists(spark: SparkSession, rel: String): Boolean = store.exists(rel)
 
   def read(spark: SparkSession, rel: String, schema: StructType): DataFrame =
-    if (exists(spark, rel)) spark.read.parquet(p(rel))
+    if (exists(spark, rel)) spark.read.parquet(store.path(rel))
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
-  def replace(df: DataFrame, rel: String): Unit = {
-    val tmp = p(rel) + ".__tmp__"
-    df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    val target = java.nio.file.Paths.get(p(rel))
-    if (java.nio.file.Files.isDirectory(target)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(target).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    } else java.nio.file.Files.deleteIfExists(target)
-    java.nio.file.Files.move(java.nio.file.Paths.get(tmp), target)
-  }
+  def replace(df: DataFrame, rel: String): Unit =
+    store.replace(rel)(tmp => df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(store.path(tmp)))
 
   def append(df: DataFrame, rel: String): Unit =
-    df.coalesce(1).write.mode(SaveMode.Append).parquet(p(rel))
+    df.coalesce(1).write.mode(SaveMode.Append).parquet(store.path(rel))
 }
 
 /**

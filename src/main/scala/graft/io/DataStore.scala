@@ -1,16 +1,18 @@
 package graft.io
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
+import java.nio.charset.StandardCharsets.UTF_8
 
 /**
  * Storage abstraction mirroring the reference's DataStore surface
  * (data_store_utils.py:34-84: exists/read/write/list/remove) and the view
- * directory layout of FILE_STRUCTURE.md:263-302. Local-FS implementation;
- * the path conventions are the contract — an object-store implementation
- * slots in behind the same interface.
+ * directory layout of FILE_STRUCTURE.md:263-302. The root is any Hadoop URI
+ * (a local path, `file:`, `hdfs:`, `s3a:` …): Spark reads and writes the
+ * data under it, and every metadata operation (exists, list, remove, the
+ * text files, the renames that publish a write) goes through the root's
+ * Hadoop `FileSystem` too, as do the parquet control tables.
  *
  * Single-file CSV semantics (reference S9: one CSV per storm/threshold) are
  * implemented as coalesce(1) + part-file rename; the parquet writers keep
@@ -22,26 +24,27 @@ class DataStore(root: String,
 
   def path(parts: String*): String = (Seq(root) ++ parts).mkString("/")
 
+  /** The root's file system, resolved once from the active session's Hadoop
+    * conf (see [[StoreFs.of]]). */
+  private lazy val fs: FileSystem = StoreFs.of(new Path(root), SparkSession.active)
+
+  private def fsPath(rel: String): Path = new Path(path(rel))
+
   /** Control-table persistence (registry / run log / completion log):
     * parquet under the root by default, or any JDBC warehouse via
     * [[JdbcControlBackend]] — see [[ControlBackend]]. */
   val controlTables: ControlBackend =
-    control.getOrElse(new ParquetControlBackend(root))
+    control.getOrElse(new ParquetControlBackend(this))
 
-  def exists(rel: String): Boolean = Files.exists(Paths.get(path(rel)))
+  def exists(rel: String): Boolean = fs.exists(fsPath(rel))
 
   def list(relDir: String): Seq[String] = {
-    val dir = Paths.get(path(relDir))
-    if (!Files.isDirectory(dir)) Nil
-    else Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+    val dir = fsPath(relDir)
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).map(_.getPath.getName).toSeq.sorted
   }
 
-  def remove(rel: String): Unit = {
-    val p = Paths.get(path(rel))
-    if (Files.isDirectory(p))
-      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-    else Files.deleteIfExists(p)
-  }
+  def remove(rel: String): Unit = fs.delete(fsPath(rel), true)
 
   /** Stale-output cleanup (S15, impact_analysis.py:2790-2805): delete every
     * entry whose name starts with `prefix` across the given view dirs before
@@ -54,12 +57,24 @@ class DataStore(root: String,
     }.sum
 
   def writeText(rel: String, content: String): Unit = {
-    val p = Paths.get(path(rel))
-    Files.createDirectories(p.getParent)
-    Files.writeString(p, content)
+    val out = fs.create(fsPath(rel), true)
+    try out.write(content.getBytes(UTF_8)) finally out.close()
   }
 
-  def readText(rel: String): String = Files.readString(Paths.get(path(rel)))
+  def open(rel: String): java.io.InputStream = fs.open(fsPath(rel))
+
+  def readText(rel: String): String = {
+    val in = open(rel)
+    try new String(in.readAllBytes(), UTF_8) finally in.close()
+  }
+
+  /** Replaces the directory `rel` with what `write` puts at the temp rel it
+    * is given; the write completes before the old directory is removed. */
+  def replace(rel: String)(write: String => Unit): Unit = {
+    val target = fsPath(rel)
+    val dir = rel.take(rel.lastIndexOf('/') + 1)
+    StoreFs.publish(fs, target.getParent)(tmp => write(dir + tmp.getName))(tmp => Seq(tmp -> target))
+  }
 
   def writeParquet(df: DataFrame, rel: String): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(path(rel))
@@ -88,16 +103,8 @@ class DataStore(root: String,
 
   /** Single-file CSV with header (reference writes one CSV per view). */
   def writeSingleCsv(df: DataFrame, rel: String): Unit = {
-    val target = Paths.get(path(rel))
-    Files.createDirectories(target.getParent)
-    val tmp = target.resolveSibling(target.getFileName.toString + ".__tmp__")
-    df.coalesce(1).write.mode(SaveMode.Overwrite)
-      .option("header", "true").csv(tmp.toString)
-    val part = Files.list(tmp).iterator().asScala
-      .find(_.getFileName.toString.startsWith("part-"))
-      .getOrElse(throw new IllegalStateException(s"no part file under $tmp"))
-    Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
-    Files.walk(tmp).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+    StoreFs.publishFile(fs, fsPath(rel))(tmp =>
+      df.coalesce(1).write.mode(SaveMode.Overwrite).option("header", "true").csv(tmp.toString))
   }
 
   def readCsv(spark: SparkSession, rel: String): DataFrame =
@@ -111,26 +118,15 @@ class DataStore(root: String,
    */
   def writePartitionedCsv(df: DataFrame, relDir: String, partitionCol: String,
                           fileName: String => String): Seq[String] = {
-    val dir = Paths.get(path(relDir))
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(s".__fanout_${java.util.UUID.randomUUID()}__")
-    df.repartition(col(partitionCol))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCol)
-      .option("header", "true").csv(tmp.toString)
-    val written = Files.list(tmp).iterator().asScala
-      .filter(p => p.getFileName.toString.startsWith(s"$partitionCol="))
-      .map { pDir =>
-        val value = pDir.getFileName.toString.stripPrefix(s"$partitionCol=")
-        val part = Files.list(pDir).iterator().asScala
-          .find(_.getFileName.toString.startsWith("part-"))
-          .getOrElse(throw new IllegalStateException(s"no part file under $pDir"))
-        val target = dir.resolve(fileName(value))
-        Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
-        fileName(value)
-      }.toSeq
-    Files.walk(tmp).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-    written.sorted
+    val dir = fsPath(relDir)
+    StoreFs.publish(fs, dir)(tmp =>
+      df.repartition(col(partitionCol))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy(partitionCol)
+        .option("header", "true").csv(tmp.toString)
+    )(tmp => StoreFs.partitions(fs, tmp, partitionCol).map { case (value, pDir) =>
+      StoreFs.partFile(fs, pDir) -> new Path(dir, fileName(value))
+    }).map(_.getName).sorted
   }
 
   /**
@@ -142,25 +138,15 @@ class DataStore(root: String,
    */
   def writePartitionedParquet(df: DataFrame, relDir: String, partitionCol: String,
                               dirName: String => String): Seq[String] = {
-    val dir = Paths.get(path(relDir))
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(s".__fanout_${java.util.UUID.randomUUID()}__")
-    df.repartition(col(partitionCol))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCol)
-      .parquet(tmp.toString)
-    val written = Files.list(tmp).iterator().asScala
-      .filter(p => p.getFileName.toString.startsWith(s"$partitionCol="))
-      .map { pDir =>
-        val value = pDir.getFileName.toString.stripPrefix(s"$partitionCol=")
-        val target = dir.resolve(dirName(value))
-        if (Files.exists(target))
-          Files.walk(target).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-        Files.move(pDir, target, StandardCopyOption.REPLACE_EXISTING)
-        dirName(value)
-      }.toSeq
-    Files.walk(tmp).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-    written.sorted
+    val dir = fsPath(relDir)
+    StoreFs.publish(fs, dir)(tmp =>
+      df.repartition(col(partitionCol))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy(partitionCol)
+        .parquet(tmp.toString)
+    )(tmp => StoreFs.partitions(fs, tmp, partitionCol).map { case (value, pDir) =>
+      pDir -> new Path(dir, dirName(value))
+    }).map(_.getName).sorted
   }
 
   /**

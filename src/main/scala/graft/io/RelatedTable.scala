@@ -93,7 +93,7 @@ object RelatedTable {
            geomColumn: String = "tile_id"): DataFrame = {
     require(files.nonEmpty, "no admin impact files to flatten")
     val byHeader: Seq[Seq[AdminImpactFile]] = files.groupBy { f =>
-      val src = scala.io.Source.fromFile(store.path("admin_impact_views", f.file))
+      val src = scala.io.Source.fromInputStream(store.open(s"admin_impact_views/${f.file}"))
       try src.getLines().nextOption().getOrElse("") finally src.close()
     }.toSeq.sortBy(_._1).map(_._2)
 

@@ -349,7 +349,8 @@ object Jobs {
    */
   def patch(spark: SparkSession, store: DataStore, country: String, zoom: Int,
             columnValues: DataFrame /* tile_id + columns to patch */): Unit = {
-    val base = store.readParquet(spark, s"mercator_views/${country}_$zoom.parquet")
+    val baseRel = s"mercator_views/${country}_$zoom.parquet"
+    val base = store.readParquet(spark, baseRel)
     val patchCols = columnValues.columns.filterNot(_ == "tile_id")
     val renamed = patchCols.foldLeft(columnValues) { (d, c) => d.withColumnRenamed(c, s"__new_$c") }
     val joined = base.join(renamed, Seq("tile_id"), "left")
@@ -358,27 +359,17 @@ object Jobs {
        else d.withColumn(c, col(s"__new_$c"))).drop(s"__new_$c")
     }
     // the temp copy is complete before the base it reads is removed
-    val tmp = s"mercator_views/${country}_$zoom.parquet.__tmp__"
-    store.writeParquet(patched, tmp)
-    store.remove(s"mercator_views/${country}_$zoom.parquet")
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(store.path(tmp)),
-      java.nio.file.Paths.get(store.path(s"mercator_views/${country}_$zoom.parquet")))
+    store.replace(baseRel)(tmp => store.writeParquet(patched, tmp))
 
     // re-aggregate every initialized admin view (impact_analysis.py:1421-1454)
     initializedAdminLevels(store, country).foreach { level =>
       val adminRel = s"admin_views/${country}_admin$level.parquet"
       val boundaries = store.readParquet(spark, adminRel)
         .select(col("tile_id").as("id"), col("name"), col("geometry"))
-      val refreshed = store.readParquet(spark, s"mercator_views/${country}_$zoom.parquet")
+      val refreshed = store.readParquet(spark, baseRel)
       val withIds = if (level == 1) refreshed
         else AdminOverlay.assign(refreshed.drop("id"), boundaries.select("id", "geometry"))
-      val tmpA = adminRel + ".__tmp__"
-      store.writeParquet(adminLayer(withIds, boundaries), tmpA)
-      store.remove(adminRel)
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(store.path(tmpA)),
-        java.nio.file.Paths.get(store.path(adminRel)))
+      store.replace(adminRel)(tmp => store.writeParquet(adminLayer(withIds, boundaries), tmp))
     }
   }
 }

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.io.StoreFs
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -68,15 +70,11 @@ object Streaming {
     * ordered-batch gate/bench (s16/s19/ScaleBench); keep mtime handling
     * here so a fix lands once. */
   def writeOrderedMicrobatch(df: DataFrame, inDir: String, b: Int): Unit = {
-    val stage = java.nio.file.Files.createTempDirectory("graft-mb").toString
-    df.coalesce(1).write.mode("overwrite").parquet(stage)
-    val part = new java.io.File(stage).listFiles()
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(s"no part file under $stage"))
-    val dir = new java.io.File(inDir); dir.mkdirs()
-    val dest = new java.io.File(dir, s"b$b.parquet")
-    java.nio.file.Files.move(part.toPath, dest.toPath)
-    dest.setLastModified((b + 1) * 1000000000L)
+    val dir = new Path(inDir)
+    val fs = StoreFs.of(dir, df.sparkSession)
+    val dest = new Path(dir, s"b$b.parquet")
+    StoreFs.publishFile(fs, dest)(tmp => df.coalesce(1).write.mode("overwrite").parquet(tmp.toString))
+    fs.setTimes(dest, (b + 1) * 1000000000L, -1)
   }
 
   /** File-source stream over a directory of parquet drops. `glob` narrows
@@ -590,9 +588,10 @@ object Streaming {
 
   /** Latest committed version of an [[ivmRefreshStream]] view. */
   def latestIvmView(spark: SparkSession, viewDir: String): DataFrame = {
-    val latest = new java.io.File(viewDir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("v="))
-      .map(_.getName.stripPrefix("v=").toLong).max
+    val dir = new Path(viewDir)
+    val latest = dir.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(dir)
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
+      .map(_.getPath.getName.stripPrefix("v=").toLong).max
     spark.read.parquet(s"$viewDir/v=$latest")
   }
 
