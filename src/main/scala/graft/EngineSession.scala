@@ -29,7 +29,7 @@ import org.apache.spark.sql.SparkSession
   *   - UTC session time, no UI;
   *   - `nanosAsLong`: events.parquet has shipped as TIMESTAMP(NANOS) in
   *     some generations, which Spark reads only as a long under this
-  *     legacy conf (`SparkEntry.t` truncates it to micros).
+  *     legacy conf (`graft.gates.GateInputs` truncates it to micros).
   *
   * The session also gets the geo and text functions and one log level.
   */

@@ -40,8 +40,8 @@ trait ControlBackend {
 
 /** Parquet control tables under the store's root, through the root's file
   * system. `replace` writes the new table into a hidden temp directory,
-  * then deletes the old one and renames the temp into its place, so a reader
-  * never sees a half-written table. */
+  * then swaps it in through [[StoreFs.publish]], so a reader never sees a
+  * half-written table, and a failed or interrupted swap leaves the old one. */
 final class ParquetControlBackend(store: DataStore) extends ControlBackend {
 
   def exists(spark: SparkSession, rel: String): Boolean = store.exists(rel)

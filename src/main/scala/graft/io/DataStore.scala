@@ -36,7 +36,13 @@ class DataStore(root: String,
   val controlTables: ControlBackend =
     control.getOrElse(new ParquetControlBackend(this))
 
-  def exists(rel: String): Boolean = fs.exists(fsPath(rel))
+  /** Whether `rel` exists, after putting back a table an interrupted
+    * publish left aside (see [[StoreFs.recover]]). */
+  def exists(rel: String): Boolean = {
+    val p = fsPath(rel)
+    StoreFs.recover(fs, p)
+    fs.exists(p)
+  }
 
   def list(relDir: String): Seq[String] = {
     val dir = fsPath(relDir)
@@ -69,7 +75,8 @@ class DataStore(root: String,
   }
 
   /** Replaces the directory `rel` with what `write` puts at the temp rel it
-    * is given; the write completes before the old directory is removed. */
+    * is given; the write completes before the old directory is moved aside
+    * (see [[StoreFs.publish]]). */
   def replace(rel: String)(write: String => Unit): Unit = {
     val target = fsPath(rel)
     val dir = rel.take(rel.lastIndexOf('/') + 1)
@@ -79,8 +86,10 @@ class DataStore(root: String,
   def writeParquet(df: DataFrame, rel: String): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(path(rel))
 
-  def readParquet(spark: SparkSession, rel: String): DataFrame =
+  def readParquet(spark: SparkSession, rel: String): DataFrame = {
+    StoreFs.recover(fs, fsPath(rel))
     spark.read.parquet(path(rel))
+  }
 
   /**
    * Bucketed + bucket-sorted managed-table write — the CO-LOCATED JOIN

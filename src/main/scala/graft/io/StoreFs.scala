@@ -23,7 +23,10 @@ private[graft] object StoreFs {
   /** Writes into a fresh hidden temp directory under `dir`, renames each
     * (source, target) pair `picks` selects from it into place, replacing the
     * target, and deletes the temp. Each write completes before any target
-    * is removed. Returns the targets. */
+    * is touched. An existing target is first renamed to its [[aside]], and
+    * deleted only once its replacement is in place, so at every instant one
+    * of the two holds a whole table; a failed rename puts the old one back
+    * at once, and [[recover]] does so after a crash. Returns the targets. */
   def publish(fs: FileSystem, dir: Path)(write: Path => Unit)
              (picks: Path => Seq[(Path, Path)]): Seq[Path] = {
     // dot-prefixed: hidden from Spark's file listings and the file streams
@@ -31,13 +34,34 @@ private[graft] object StoreFs {
     try {
       write(tmp)
       picks(tmp).map { case (src, target) =>
-        fs.delete(target, true)
-        if (!fs.rename(src, target))
-          throw new java.io.IOException(s"could not rename $src to $target")
+        recover(fs, target)
+        val old = aside(target)
+        if (fs.exists(target)) rename(fs, target, old)
+        try rename(fs, src, target)
+        catch { case e: Throwable => recover(fs, target); throw e }
+        fs.delete(old, true)
         target
       }
     } finally fs.delete(tmp, true)
   }
+
+  /** The hidden sibling `target` is moved to while [[publish]] renames its
+    * replacement in. */
+  def aside(target: Path): Path = new Path(target.getParent, s".${target.getName}.__old__")
+
+  /** Finishes a swap that [[publish]] did not: a target that is absent while
+    * its aside exists was moved aside and never replaced, so the aside goes
+    * back; an aside beside a present target is one whose delete never ran. */
+  def recover(fs: FileSystem, target: Path): Unit = {
+    val old = aside(target)
+    if (fs.exists(old)) {
+      if (fs.exists(target)) fs.delete(old, true) else rename(fs, old, target)
+    }
+  }
+
+  private def rename(fs: FileSystem, src: Path, dst: Path): Unit =
+    if (!fs.rename(src, dst))
+      throw new java.io.IOException(s"could not rename $src to $dst")
 
   /** [[publish]] for a single-partition write: its one part file becomes
     * `target`. */

@@ -19,9 +19,9 @@ import org.apache.spark.sql.DataFrame
   * The shuffle moves the kernel's INPUT (narrow: id + text), never the
   * kernel's output, so the bytes are the cheapest thing in the query.
   *
-  * `spark.graft.spread=false` disables it (PlanSpec pins at-scale plan
-  * shapes under that setting; the default ON path is what Bench/Verify
-  * run).
+  * The session conf `spark.graft.spread=false` disables it (PlanSpec pins
+  * at-scale plan shapes under that setting; the default ON path is what
+  * Bench/Verify run).
   */
 object Spread {
   def ifNarrow(df: DataFrame): DataFrame = {
@@ -30,9 +30,7 @@ object Spread {
     // and its partitioning is the source's to decide; operators that run
     // inside foreachBatch see batch frames and are unaffected
     if (df.isStreaming) return df
-    val enabled = sys.env.getOrElse("SPARK_GRAFT_SPREAD",
-      spark.conf.get("spark.graft.spread", "true"))
-    if (!enabled.toBoolean) df
+    if (!spark.conf.get("spark.graft.spread", "true").toBoolean) df
     else {
       val p = spark.sparkContext.defaultParallelism
       // .rdd only plans (no job); cheap for the scan-shaped inputs this

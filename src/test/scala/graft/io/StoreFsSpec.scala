@@ -19,6 +19,26 @@ class GraftFs extends RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("graftfs:///")
 }
 
+/** [[GraftFs]] under the scheme `flakyfs`, whose next rename onto the path
+  * in [[FlakyGraftFs.failRenameOnto]] throws, once. */
+class FlakyGraftFs extends GraftFs {
+  override def getScheme: String = "flakyfs"
+  override def getUri: java.net.URI = java.net.URI.create("flakyfs:///")
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean = {
+    FlakyGraftFs.synchronized {
+      if (FlakyGraftFs.failRenameOnto.contains(dst.toUri.getPath)) {
+        FlakyGraftFs.failRenameOnto = None
+        throw new java.io.IOException(s"injected failure: rename $src to $dst")
+      }
+    }
+    super.rename(src, dst)
+  }
+}
+
+object FlakyGraftFs {
+  @volatile var failRenameOnto: Option[String] = None
+}
+
 /** One storage path: every operation on a store path goes through the
   * root's Hadoop FileSystem, and what a write publishes is the layout the
   * views always had. */
@@ -50,11 +70,11 @@ class StoreFsSpec extends SparkSpec {
     if (!Files.isDirectory(dir)) Set.empty
     else Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSet
 
-  /** Runs `body` on a sibling session that binds `graftfs` to [[GraftFs]],
-    * made the active session for the duration. */
-  private def onGraftFs[A](body: SparkSession => A): A = {
+  /** Runs `body` on a sibling session that binds `scheme` to `impl`, made
+    * the active session for the duration. */
+  private def onFs[A](scheme: String, impl: Class[_ <: GraftFs])(body: SparkSession => A): A = {
     val ss = spark.newSession()
-    ss.conf.set("fs.graftfs.impl", classOf[GraftFs].getName)
+    ss.conf.set(s"fs.$scheme.impl", impl.getName)
     graft.geo.GeoFunctions.ensureRegistered(ss)
     val previous = SparkSession.getActiveSession
     SparkSession.setActiveSession(ss)
@@ -67,7 +87,7 @@ class StoreFsSpec extends SparkSpec {
     val local = tmp.resolve("store")
     val stray = Paths.get("graftfs:")
     assert(!Files.exists(stray))
-    val (adminSum, tileSum) = onGraftFs { ss =>
+    val (adminSum, tileSum) = onFs("graftfs", classOf[GraftFs]) { ss =>
       val store = new DataStore(s"graftfs://$tmp/store")
       val tiles = initialize(ss, store)
       update(ss, store, "CSVSTORM", "csv")
@@ -96,6 +116,46 @@ class StoreFsSpec extends SparkSpec {
     assert(views.contains(s"${country}_PQSTORM_${date}_${zoom}_cci.parquet"))
     assert(Files.isDirectory(local.resolve(s"mercator_views/${country}_$zoom.parquet")))
     assert(Files.readString(local.resolve("storms.json")).contains("PQSTORM"))
+  }
+
+  test("a publish whose rename into place fails, or never runs, leaves the old table, and the next one leaves no aside") {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val tmp = Files.createTempDirectory("graft-flakyfs")
+    val local = tmp.resolve("store")
+    val rel = "control/pipeline_countries.parquet"
+    val baseRel = s"mercator_views/${country}_$zoom.parquet"
+    def failNextRenameOnto(rel: String): Unit =
+      FlakyGraftFs.failRenameOnto = Some(local.resolve(rel).toString)
+    onFs("flakyfs", classOf[FlakyGraftFs]) { ss =>
+      val store = new DataStore(s"flakyfs://$tmp/store")
+      val backend = store.controlTables
+      val schema = StructType(Seq(StructField("id", LongType)))
+      def ids(): Seq[Long] =
+        backend.read(ss, rel, schema).collect().map(_.getLong(0)).toSeq.sorted
+      backend.replace(ss.range(3).toDF("id"), rel)
+
+      failNextRenameOnto(rel)
+      intercept[java.io.IOException](backend.replace(ss.range(5).toDF("id"), rel))
+      assert(ids() == Seq(0L, 1L, 2L), "a failed replace lost the registry")
+
+      // a crash between moving the table aside and renaming the new one in
+      Files.move(local.resolve(rel), local.resolve("control/.pipeline_countries.parquet.__old__"))
+      assert(ids() == Seq(0L, 1L, 2L), "the table left aside was not put back")
+
+      backend.replace(ss.range(5).toDF("id"), rel)
+      assert(ids() == (0L until 5L))
+      assert(ls(local.resolve("control")) == Set("pipeline_countries.parquet"))
+
+      val tiles = initialize(ss, store)
+      def population(): Double =
+        store.readParquet(ss, baseRel).agg(sum("population")).head().getDouble(0)
+      val before = population()
+      failNextRenameOnto(baseRel)
+      intercept[java.io.IOException](Jobs.patch(ss, store, country, zoom,
+        tiles.select(col("tile_id"), (col("population") * 2).as("population"))))
+      assert(population() == before, "a failed patch lost the base layer")
+      assert(!ls(local.resolve("mercator_views")).exists(_.contains("__old__")))
+    }
   }
 
   test("a csv update publishes the views and nothing beside them: no .crc or temp entries") {

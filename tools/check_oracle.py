@@ -49,10 +49,11 @@ def main():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
     oracle = json.load(open(f"{OUT}/oracle_sql.json"))
     results = {}
-    for name in sorted(os.listdir(OUT)):
+    # every gate the oracle names counts, written or not: a gate that threw
+    # in Verify leaves no output dir and must not drop out of the total
+    dirs = {n for n in os.listdir(OUT) if os.path.isdir(os.path.join(OUT, n))}
+    for name in sorted(dirs | set(oracle)):
         pdir = os.path.join(OUT, name)
-        if not os.path.isdir(pdir):
-            continue
         files = glob.glob(f"{pdir}/*.parquet")
         if not files:
             results[name] = "NO_OUTPUT"
