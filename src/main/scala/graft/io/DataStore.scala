@@ -86,9 +86,20 @@ class DataStore(root: String,
   def writeParquet(df: DataFrame, rel: String): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(path(rel))
 
+  /** The parquet table at `rel`, read with the schema Spark's writer stored
+    * in its first data file's footer, so the read starts no Spark job. That
+    * is the file Spark's own schema inference reads; its footer is read on
+    * the driver through the store's file system. A table with no such footer
+    * key, with no top-level data file (a `partitionBy` layout) or with
+    * summary files is read by `spark.read.parquet`, which infers the schema
+    * in a Spark job. */
   def readParquet(spark: SparkSession, rel: String): DataFrame = {
-    StoreFs.recover(fs, fsPath(rel))
-    spark.read.parquet(path(rel))
+    val p = fsPath(rel)
+    StoreFs.recover(fs, p)
+    StoreFs.sparkSchema(fs, p, spark) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path(rel))
+      case None => spark.read.parquet(path(rel))
+    }
   }
 
   /**

@@ -1,7 +1,11 @@
 package graft.io
 
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopStreams
+import org.apache.parquet.io.{InputFile, SeekableInputStream}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The metadata side of a store: which Hadoop `FileSystem` a path's
   * exists/list/rename/delete calls go to, and the one way a Spark write is
@@ -78,4 +82,32 @@ private[graft] object StoreFs {
   def partitions(fs: FileSystem, dir: Path, col: String): Seq[(String, Path)] =
     fs.listStatus(dir).toSeq.map(_.getPath).filter(_.getName.startsWith(s"$col="))
       .map(p => p.getName.stripPrefix(s"$col=") -> p)
+
+  /** The footer key under which Spark's parquet writer stores the table's
+    * Spark schema. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The Spark schema stored in the footer of the parquet table at `dir`'s
+    * first data file, the one file Spark's schema inference reads (the
+    * first by path, when the session does not merge schemas). None when the
+    * inference would read something else (summary files, partition
+    * directories, a merged schema) or the footer holds no Spark schema. */
+  def sparkSchema(fs: FileSystem, dir: Path, spark: SparkSession): Option[StructType] =
+    if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean) None
+    else scala.util.Try {
+      val summary = Set("_metadata", "_common_metadata")
+      // the names Spark's file listing skips
+      def hidden(name: String): Boolean = !summary(name) &&
+        ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") || name.endsWith("._COPYING_"))
+      val entries = fs.listStatus(dir).filterNot(s => hidden(s.getPath.getName))
+      if (entries.exists(s => s.isDirectory || summary(s.getPath.getName))) None
+      else entries.sortBy(_.getPath.toString).headOption.flatMap { first =>
+        val reader = ParquetFileReader.open(new InputFile {
+          def getLength: Long = first.getLen
+          def newStream(): SeekableInputStream = HadoopStreams.wrap(fs.open(first.getPath))
+        })
+        try Option(reader.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
+        finally reader.close()
+      }.map(json => DataType.fromJson(json).asInstanceOf[StructType])
+    }.toOption.flatten
 }

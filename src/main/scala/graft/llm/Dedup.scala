@@ -397,22 +397,25 @@ object Dedup {
     * (naked parquet at the top level) loudly — appending the pfx=
     * layout next to it would corrupt both. */
   def signatureIndexExists(dir: String): Boolean = {
-    val d = new java.io.File(dir)
-    if (!d.isDirectory) return false
+    import org.apache.hadoop.fs.Path
     // session conf when a session is active (credentials/settings for
     // object stores), bare defaults otherwise — same FS resolution as
     // compactSignatureIndex
     val conf = org.apache.spark.sql.SparkSession.getActiveSession
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new org.apache.hadoop.conf.Configuration())
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    if (!fs.exists(root) || !fs.getFileStatus(root).isDirectory) return false
     recoverInterruptedCompactions(dir, conf)
-    require(!d.listFiles().exists(f => f.isFile && f.getName.endsWith(".parquet")),
+    val entries = fs.listStatus(root)
+    require(!entries.exists(s => s.isFile && s.getPath.getName.endsWith(".parquet")),
       s"signature index at $dir uses the legacy FLAT layout (top-level parquet" +
         " files); migrate it to the pfx= bucketed layout before streaming" +
         " against it — mixed layouts fail Spark's partition discovery")
-    d.listFiles().exists(p =>
-      p.isDirectory && p.getName.startsWith("pfx=") &&
-        p.listFiles().exists(_.getName.endsWith(".parquet")))
+    entries.exists(s =>
+      s.isDirectory && s.getPath.getName.startsWith("pfx=") &&
+        fs.listStatus(s.getPath).exists(_.getPath.getName.endsWith(".parquet")))
   }
 
   /** Compact index partitions that have accumulated more than

@@ -3,10 +3,8 @@ package graft.pipeline
 import graft.io.DataStore
 import graft.ops.{AdminOverlay, Aggregations, Cci}
 import graft.util.Collects
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-
-import java.util.concurrent.{Callable, ExecutionException, Executors, Future, TimeUnit}
 
 /**
  * The three pipeline entry modes (reference main_pipeline.py:816-828):
@@ -125,20 +123,26 @@ object Jobs {
    * prefix cleanup, processed-state dedup and run logging.
    *
    * Two phases. The build phase, on the calling thread, cleans the stale
-   * outputs by prefix, reads the base layers and builds every view frame,
-   * caching each shared one. The publish phase then runs each output (the
-   * tile-view fan-out, each facility view, the CCI tile view, each admin
-   * level's fan-out and CCI rollup, the track view, the report) on a thread
-   * of its own, so their small Spark jobs share the cores instead of
+   * outputs by prefix, reads the base layers (with the schemas their
+   * footers store, so no read starts a Spark job) and builds every view
+   * frame, caching each shared one. A cached frame that ends in a shuffle
+   * (the admin1 view and both CCI views) is first narrowed to the cluster's
+   * width, since a cached plan keeps its output partitioning and would
+   * otherwise be filled and read at the full `spark.sql.shuffle.partitions`.
+   *
+   * The publish phase then runs each output on a thread of its own (see
+   * [[Outputs]]), so their small Spark jobs share the cores instead of
    * queueing. An output that reads a shared cache starts after the one
-   * output that fills it, so an update runs the same jobs as when its outputs
-   * run one by one. The threads are created by the caller, so every job
-   * carries the caller's local properties (job group, description, scheduler
-   * pool). Only when every output has been published does the update record
-   * the forecast in storms.json and append a SUCCESS row to the run log. A
-   * failed output is rethrown as itself, with the other outputs' failures
-   * attached as suppressed, once every output has stopped and before the
-   * caches are released.
+   * output that fills it. The first output fills the tiles and the tile
+   * view in one job; the tile-view fan-out, the CCI tile view, each admin
+   * level's fan-out, the track view and the report's tile totals all start
+   * once it is done, and each facility view at once. The report is one
+   * output per query, each starting once its input is filled, and one that
+   * assembles it (see [[Reports.publish]]). Only when every output has been
+   * published does the update record the forecast in storms.json and append
+   * a SUCCESS row to the run log. A failed output is rethrown as itself,
+   * with the other outputs' failures attached as suppressed, once every
+   * output has stopped and before the caches are released.
    *
    * @param viewFormat "csv" (default — the reference's single-file-per-view
    *                   contract) or "parquet" (partitioned, multi-writer:
@@ -183,33 +187,38 @@ object Jobs {
     // cache is released on every exit path
     val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def cache(df: DataFrame): DataFrame = { cached += df; df.cache() }
+    // A cached plan keeps its output partitioning, so a cached aggregate
+    // would be filled, and read, at the full spark.sql.shuffle.partitions:
+    // each one is narrowed to the cluster's width first (no shuffle), and
+    // every frame that reads it is built from the narrowed frame, so its
+    // plan finds the cache.
+    def cacheNarrow(df: DataFrame): DataFrame =
+      cache(df.coalesce(spark.sparkContext.defaultParallelism))
     // The publish phase: each output's Spark work, run once the build is
     // done. A cached frame is filled by the first query that reads it, and
     // every query that starts reading it before that fill ends runs a fill
     // job of its own. So each shared cache has one output that fills it, and
     // the other outputs that read it start after that one has finished.
-    val outputs = scala.collection.mutable.ArrayBuffer.empty[Output]
-    def publish(after: Int*)(output: => Unit): Int = {
-      outputs += Output(after, () => output)
-      outputs.size - 1
-    }
-    var report = Map.empty[String, Any] // set by the report output
+    val outputs = new Outputs
+    import outputs.publish
     try {
       val tiles = cache(store.readParquet(spark, s"mercator_views/${country}_$zoom.parquet"))
       val admins = store.readParquet(spark, s"admin_views/${country}_admin1.parquet")
         .select(col("tile_id").as("id"), col("name"), col("geometry"))
 
+      // one job fills tiles and tv, so every output that reads them starts
+      // at once
+      val tv = cache(ImpactPipeline.tileView(tiles, envs))
+      val filled = publish()(tv.write.format("noop").mode(SaveMode.Overwrite).save())
+
       // tile view + per-threshold CSVs (S9 layout: one per threshold) — one
       // partitionBy pass fans out all thresholds (SURVEY.md §7.4)
-      val tv = cache(ImpactPipeline.tileView(tiles, envs))
-      val tileOutput = // fills tiles and tv
-        publish()(fanoutViews(tv, "mercator_impact_views", th => s"$prefix${th}_$zoom.$vext"))
+      publish(filled)(fanoutViews(tv, "mercator_impact_views", th => s"$prefix${th}_$zoom.$vext"))
 
       // facility views ×4 (only kinds with a cached layer): kind -> (layer,
       // view); the track view reads the same layers. Each view's output
-      // fills its cache; the report, which reads it too, starts after.
-      val reportAfter = scala.collection.mutable.ArrayBuffer(tileOutput)
-      val facilities: Map[String, (DataFrame, DataFrame)] =
+      // fills its cache.
+      val facilities: Map[String, (DataFrame, Reports.Ready)] =
         Seq("school" -> "school_id", "hc" -> "hc_id", "shelter" -> "shelter_id", "wash" -> "wash_id")
           .flatMap { case (kind, idCol) =>
             val rel = s"${kind}_views/${country}_$kind.parquet"
@@ -218,31 +227,30 @@ object Jobs {
               val layer = store.readParquet(spark, rel)
               val fv = cache(ImpactPipeline.facilityView(layer, envs, idCol))
               // one partitionBy pass fans out every threshold (S9 layout)
-              reportAfter += publish()(store.writePartitionedParquet(fv.drop("geometry"),
+              val output = publish()(store.writePartitionedParquet(fv.drop("geometry"),
                 s"${kind}_views", "wind_threshold", th => s"$prefix$th.parquet"))
-              Some(kind -> (layer, fv))
+              Some(kind -> (layer, Reports.Ready(fv, output)))
             }
           }.toMap
       def facilityLayer(kind: String) = facilities.get(kind).map(_._1)
-      def facilityView(kind: String) = facilities.get(kind).map(_._2)
 
       // admin views + CCIs — one pass per initialized admin level
       // (impact_analysis.py:2868-2907): level 1 reuses the admin ids already
       // on the tiles; deeper levels re-overlay against the level's stored
       // boundaries — no external lookup, mirroring the reference's reuse of
       // the admin parquet's geometries.
-      val (cciTiles, cciAdmin) = ImpactPipeline.cciViews(tv, tiles)
-      cache(cciTiles); cache(cciAdmin)
+      val cciTiles = cacheNarrow(Cci.calculate(tv, tiles))
+      val cciAdmin = cacheNarrow(Cci.adminRollup(cciTiles))
       val cciOutput = // fills cciTiles
-        publish(tileOutput)(singleView(cciTiles, s"mercator_impact_views/$prefix${zoom}_cci.$vext"))
-      reportAfter += cciOutput
+        publish(filled)(singleView(cciTiles, s"mercator_impact_views/$prefix${zoom}_cci.$vext"))
 
       val levels = initializedAdminLevels(store, country) match {
         case Seq() => Seq(1)
         case ls => ls
       }
-      var av: DataFrame = null // level-1 view doubles as the report input
-      levels.foreach { level =>
+      // level -> its admin view and CCI rollup, each with the output that
+      // fills it at level 1, where they double as the report's inputs
+      val levelViews = levels.map { level =>
         val adminsN = if (level == 1) admins
           else store.readParquet(spark, s"admin_views/${country}_admin$level.parquet")
             .select(col("tile_id").as("id"), col("name"), col("geometry"))
@@ -251,93 +259,51 @@ object Jobs {
           else if (store.exists(mapRel)) store.readParquet(spark, mapRel) // precomputed at init
           else AdminOverlay.assign(tiles.select("tile_id", "geometry"), adminsN)
             .select("tile_id", "id")
-        val avN = ImpactPipeline.adminView(
-          if (level == 1) tv else tv.drop("id"), tileIds, adminsN)
-        if (level == 1) av = cache(avN)
+        val avN = if (level == 1) cacheNarrow(ImpactPipeline.adminView(tv, tileIds, adminsN))
+          else ImpactPipeline.adminView(tv.drop("id"), tileIds, adminsN)
         val cciAdminN = if (level == 1) cciAdmin
           else Cci.adminRollup(cciTiles.drop("id").join(
             broadcast(tileIds.withColumnRenamed("tile_id", "zone_id")), Seq("zone_id"), "left"))
-        // at level 1 these two fill av and cciAdmin
-        val viewOutput = publish(tileOutput)(fanoutViews(avN.drop("geometry"),
+        val viewOutput = publish(filled)(fanoutViews(avN.drop("geometry"),
           "admin_impact_views", th => s"$prefix${th}_admin$level.$vext"))
         val cciOutputN = publish(cciOutput)(
           singleView(cciAdminN, s"admin_impact_views/${prefix}admin${level}_cci.$vext"))
-        if (level == 1) reportAfter ++= Seq(viewOutput, cciOutputN)
-      }
+        level -> (Reports.Ready(avN, viewOutput), Reports.Ready(cciAdminN, cciOutputN))
+      }.toMap
       // the JSON report always reads the admin1 view, even when level 1 is not
       // among the initialized levels (impact_analysis.py:2909-2914)
-      if (av == null)
-        av = cache(ImpactPipeline.adminView(tv, tiles.select("tile_id", "id"), admins))
+      val (adminReady, cciAdminReady) = levelViews.getOrElse(1, (
+        Reports.Ready(cacheNarrow(ImpactPipeline.adminView(tv, tiles.select("tile_id", "id"), admins)), filled),
+        Reports.Ready(cciAdmin, cciOutput)))
 
       // track view, over the facility layers the facility views read
       (facilityLayer("school"), facilityLayer("hc")) match {
         case (Some(schools), Some(hcs)) =>
-          publish(tileOutput)(store.writeParquet(ImpactPipeline.trackView(envs, schools, hcs,
+          publish(filled)(store.writeParquet(ImpactPipeline.trackView(envs, schools, hcs,
             facilityLayer("shelter"), facilityLayer("wash"), tiles),
             s"track_views/${prefix}tracks.parquet"))
         case _ => ()
       }
 
       // report with as-of previous (J15)
-      val adminView = av
-      publish(reportAfter.toSeq: _*) {
-        val prevDate = Reports.previousDate(date)
-        val prevRel = s"reports_json/${country}_${storm}_$prevDate.json"
-        val previous = if (store.exists(prevRel)) Reports.fromJson(store.readText(prevRel)) else Map.empty[String, Any]
-        val adminNames = admins.select("id", "name").collect()
-          .map(r => (r.getString(0), r.getString(1))).sortBy(_._1).toSeq
-        report = Reports.doReport(
-          tv, adminView, facilityView("school"), facilityView("hc"),
-          facilityView("shelter"), facilityView("wash"),
-          cciTiles, cciAdmin, adminNames, tracks, countryBoundaryWkb,
-          country, storm, date, previous)
-        if (report.nonEmpty)
+      val report = Reports.publish(outputs, Reports.Ready(tv, filled), adminReady,
+        Seq("school", "hc", "shelter", "wash").map(k => facilities.get(k).map(_._2)), cciAdminReady,
+        publish()(Reports.adminNames(admins)), tracks, countryBoundaryWkb, country, storm, date,
+        previous = {
+          val prevRel = s"reports_json/${country}_${storm}_${Reports.previousDate(date)}.json"
+          if (store.exists(prevRel)) Reports.fromJson(store.readText(prevRel)) else Map.empty
+        })
+      publish(report) {
+        if (report.get.nonEmpty)
           store.writeText(s"reports_json/$prefix.json".replace("_.json", ".json"),
-            Reports.toJson(report))
+            Reports.toJson(report.get))
       }
 
-      runConcurrently(outputs.toSeq)
+      outputs.run()
       saveProcessed(store, processed + (key -> date))
       appendRunLog(store, spark, storm, date, "SUCCESS", (System.nanoTime() - t0) / 1e9)
-      UpdateResult(processed = true, reason = "ok", report = report)
+      UpdateResult(processed = true, reason = "ok", report = report.get)
     } finally cached.foreach(_.unpersist())
-  }
-
-  /** One output of an update: its Spark work, and the indices of the earlier
-    * outputs it starts after. */
-  private final case class Output(after: Seq[Int], run: () => Unit)
-
-  /** Runs each output on a thread of its own, once the outputs it starts
-    * after have finished, and returns once all of them have stopped. The
-    * threads are created here, on the calling thread, so they inherit its
-    * Spark local properties. The first output's failure, in output order, is
-    * rethrown as itself with the later ones attached as suppressed. */
-  private def runConcurrently(outputs: Seq[Output]): Unit = {
-    val pool = Executors.newFixedThreadPool(outputs.size)
-    try {
-      val futures = scala.collection.mutable.ArrayBuffer.empty[Future[Unit]]
-      outputs.foreach { output =>
-        val after = output.after.map(futures)
-        futures += pool.submit(new Callable[Unit] {
-          def call(): Unit = {
-            // an earlier output's failure is reported through its own future
-            after.foreach(f => try f.get() catch { case _: ExecutionException => () })
-            output.run()
-          }
-        })
-      }
-      val failures = futures.flatMap { f =>
-        try { f.get(); None }
-        catch { case e: ExecutionException => Some(e.getCause) }
-      }
-      failures.headOption.foreach { first =>
-        failures.tail.filter(_ ne first).foreach(first.addSuppressed)
-        throw first
-      }
-    } finally {
-      pool.shutdown()
-      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
-    }
   }
 
   // --- patch -------------------------------------------------------------

@@ -1,9 +1,10 @@
 package graft.pipeline
 
-import graft.geo.{Geo, GeoFunctions}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import graft.geo.Geo
+import graft.util.Collects
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.locationtech.jts.geom.prep.PreparedGeometryFactory
 
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
@@ -12,21 +13,25 @@ import java.util.Locale
 /**
  * JSON situation-report assembly (reference reports.py:577-783).
  *
- * All heavy inputs arrive as DataFrames. Each Spark query costs a fixed
- * amount (scheduling, code generation) whatever its size, so [[doReport]]
- * reads each input in one pass and brings each small result to the driver
- * once:
- *  - the admin view: one groupBy(admin, threshold) collect gives the
- *    per-admin rows and, summed on the driver, `maxWind`;
- *  - the tile view: one groupBy(threshold) collect gives the present
- *    thresholds, the per-threshold totals and the urban/rural and
- *    poverty/severe sums with their row counts;
- *  - the CCI admin view: one collect gives the per-admin CCI values and
- *    the country totals;
- *  - each facility view: one top-5 query at the expected threshold;
- *  - the tracks: the landfall estimate ([[expectedLandfall]]).
- * Everything else is driver-side composition of those small results — the
- * Spark-idiomatic shape for a ~200-key nested document (SURVEY.md §2.9).
+ * The report is a handful of independent queries, each reading one input
+ * and bringing one small result to the driver, and one driver-side
+ * [[assemble]] of those results — the Spark-idiomatic shape for a ~200-key
+ * nested document (SURVEY.md §2.9):
+ *  - [[tileTotals]]: one groupBy(threshold) collect of the tile view gives
+ *    the present thresholds, the per-threshold totals and the urban/rural
+ *    and poverty/severe sums with their row counts;
+ *  - [[adminRows]]: one collect of the admin view, already one row per
+ *    (admin, threshold), gives the per-admin rows and, summed on the
+ *    driver, `maxWind`;
+ *  - [[cciRows]]: one collect of the CCI admin view gives the per-admin CCI
+ *    values and the country totals;
+ *  - [[topFacilities]]: per facility view, one top-5 query at the expected
+ *    threshold, once the tile totals have named it;
+ *  - [[adminNames]]: one collect of the admin names;
+ *  - [[expectedLandfall]]: the tracks, collected and scanned on the driver.
+ * [[publish]] runs each query as an output of its own that starts once its
+ * input may be read, and the assembly once all of them are done; `Jobs`
+ * publishes them among an update's outputs, [[doReport]] on their own.
  */
 object Reports {
 
@@ -54,47 +59,40 @@ object Reports {
     LocalDateTime.parse(date, CompactFmt).format(HumanFmt)
 
   /**
-   * Expected landfall (reports.py:256-311, J16/W7): per ensemble member the
-   * first (time-ordered) track point inside the country — else the first
-   * track segment crossing the boundary; report min–max lead time plus the
-   * member fraction. One window pass + one broadcast geometry test. No
-   * track rows give "Unknown" through the same aggregate (no member lands).
+   * Expected landfall (reports.py:256-311, J16/W7), on the driver: the
+   * tracks are at most 51 members × their track points. Per ensemble member
+   * (a null member is one member), with its points ordered by `valid_time`
+   * (nulls first), the landfall is the least `lead_time` of its points
+   * inside the country, else of its segments crossing the boundary (a
+   * segment's lead time is its first point's). Reports the earliest–latest
+   * landfall; no member landing gives "Unknown".
    */
   def expectedLandfall(tracks: DataFrame, countryWkb: Array[Byte], date: String): String = {
-    val spark = tracks.sparkSession
-    val bc = spark.sparkContext.broadcast(countryWkb)
-    val cache = new graft.util.ThreadLocalCache[org.locationtech.jts.geom.prep.PreparedGeometry](
-      () => org.locationtech.jts.geom.prep.PreparedGeometryFactory.prepare(Geo.fromWkb(bc.value)))
-    val withinUdf = udf { (g: Array[Byte]) =>
-      if (g == null) false else cache.get.contains(Geo.fromWkb(g))
+    val rows = Collects.boundedCollect(
+      tracks.select("ensemble_member", "valid_time", "lead_time", "geometry"),
+      what = "expected landfall tracks", alternative = "a window over each member's track")
+    val country = PreparedGeometryFactory.prepare(Geo.fromWkb(countryWkb))
+    def before(a: Row, b: Row): Boolean = (a.get(1), b.get(1)) match {
+      case (_, null) => false
+      case (null, _) => true
+      case (x: Comparable[Any] @unchecked, y) => x.compareTo(y) < 0
     }
-    val segIntersectsUdf = udf { (a: Array[Byte], b: Array[Byte]) =>
-      if (a == null || b == null) false
-      else {
-        val pa = Geo.fromWkb(a).getCoordinate; val pb = Geo.fromWkb(b).getCoordinate
-        cache.get.intersects(Geo.line(Seq((pa.x, pa.y), (pb.x, pb.y))))
-      }
-    }
-    val w = Window.partitionBy("ensemble_member").orderBy("valid_time")
-    val flagged = tracks
-      .withColumn("__next_geom", lead(col("geometry"), 1).over(w))
-      .withColumn("__in", withinUdf(col("geometry")))
-      .withColumn("__cross", segIntersectsUdf(col("geometry"), col("__next_geom")))
-    // per member: lead_time of first inside point, else of first crossing segment
-    val perMember = flagged.groupBy("ensemble_member").agg(
-      min(when(col("__in"), col("lead_time"))).as("in_lead"),
-      min(when(col("__cross"), col("lead_time"))).as("cross_lead"),
-      count(lit(1)).as("n"))
-      .withColumn("landfall_lead", coalesce(col("in_lead"), col("cross_lead")))
-    val stats = perMember.agg(
-      count(lit(1)).as("n_total"),
-      count(col("landfall_lead")).as("n_landfall"),
-      min(col("landfall_lead")).as("earliest"),
-      max(col("landfall_lead")).as("latest")).head()
-    val nTotal = stats.getLong(0); val nLf = stats.getLong(1)
-    if (nLf == 0) return "Unknown"
-    val earliest = stats.getAs[Number]("earliest").intValue()
-    val latest = stats.getAs[Number]("latest").intValue()
+    def least(leads: Seq[Number]): Option[Number] = leads.minByOption(_.doubleValue())
+    val landfalls = rows.toSeq.groupBy(r => Option(r.get(0))).values.flatMap { member =>
+      val points = member.sortWith(before)
+      val geoms = points.map(r => Option(r.getAs[Array[Byte]](3)).map(Geo.fromWkb))
+      def leads(at: Int => Boolean): Seq[Number] =
+        points.indices.filter(at).flatMap(i => Option(points(i).getAs[Number](2)))
+      val inside = leads(i => geoms(i).exists(country.contains))
+      val crossing = leads(i => i + 1 < points.size && geoms(i).zip(geoms(i + 1)).exists { case (a, b) =>
+        val (pa, pb) = (a.getCoordinate, b.getCoordinate)
+        country.intersects(Geo.line(Seq((pa.x, pa.y), (pb.x, pb.y))))
+      })
+      least(inside).orElse(least(crossing))
+    }.toSeq
+    if (landfalls.isEmpty) return "Unknown"
+    val earliest = least(landfalls).get.intValue()
+    val latest = landfalls.maxBy(_.doubleValue()).intValue()
     if (latest == 0) "Already landed"
     else if (earliest == latest) futureDate(date, earliest)
     else s"${futureDate(date, earliest)} – ${futureDate(date, latest)}"
@@ -145,51 +143,23 @@ object Reports {
     case n: Number => n.doubleValue().toLong
   }
 
+  // --- the report's queries ---------------------------------------------
+
+  /** The population columns of the vulnerability sums: key -> tile view
+    * column. */
+  private val PopCols = Seq("pop" -> "E_population", "school" -> "E_school_age_population",
+    "infant" -> "E_infant_population", "adolescent" -> "E_adolescent_population")
+
   /**
-   * Assemble the full report (reference do_report). DataFrame inputs follow
-   * the engine's long format (wind_threshold column instead of per-threshold
-   * dicts). Returns an ordered key→value map; empty when no impact.
-   *
-   * @param cciTiles the CCI tile view; unread, since the country totals are
-   *                 the sums of `cciAdmin`'s rows (kept in the signature for
-   *                 callers that pass both CCI views).
-   * @param previous previous forecast's report (loaded by the caller from
-   *                 the T−6h JSON, J15) — change fields are computed from it.
+   * The tile view's totals per threshold, from ONE pass: the totals, and the
+   * vulnerability sums (reports.py:393-462) with the number of rows that
+   * carry data — none means null keys (no data), not 0 (confirmed zero).
+   * A row carries data when its index is neither null nor NaN (`na.drop`)
+   * and its probability is positive. Every ratio is guarded by that
+   * probability test itself: with ANSI on, common-subexpression
+   * elimination would evaluate an unguarded division outside its `when`.
    */
-  def doReport(tileView: DataFrame, adminView: DataFrame,
-               schoolView: Option[DataFrame], hcView: Option[DataFrame],
-               shelterView: Option[DataFrame], washView: Option[DataFrame],
-               cciTiles: DataFrame, cciAdmin: DataFrame,
-               adminNames: Seq[(String, String)],
-               tracks: Option[DataFrame], countryWkb: Option[Array[Byte]],
-               country: String, storm: String, date: String,
-               previous: Map[String, Any] = Map.empty,
-               nowProvider: () => String = () => LocalDateTime.now().format(HumanFmt)): Map[String, Any] = {
-
-    // per-admin rows (reports.py:464-577) and maxWind from ONE pass over the
-    // long admin view: a threshold's probability sum is the sum of its
-    // admins' sums, null only when all of them are
-    val adminAgg = adminView.groupBy("tile_id", "wind_threshold").agg(
-      sum("E_population").as("pop"), sum("E_school_age_population").as("school"),
-      sum("E_infant_population").as("infant"), sum("E_adolescent_population").as("adolescent"),
-      sum("E_num_schools").as("schools"), sum("E_num_hcs").as("hcs"),
-      sum("E_num_shelters").as("shelters"), sum("E_num_wash").as("wash"),
-      sum("probability").as("p"))
-      .collect().map(r => (r.getString(0), r.getInt(1)) -> r).toMap
-    val maxWind = maxWindOf(adminAgg.toSeq
-      .groupMap(_._1._2)(e => doubleOf(e._2.getAs[Any]("p")))
-      .map { case (w, ps) => w -> ps.flatten.reduceOption(_ + _) })
-    if (maxWind == 0) return Map.empty
-
-    // ONE pass over the tile view per threshold: the totals, and the
-    // vulnerability sums (reports.py:393-462) with the number of rows that
-    // carry data — none means null keys (no data), not 0 (confirmed zero).
-    // A row carries data when its index is neither null nor NaN (`na.drop`)
-    // and its probability is positive. Every ratio is guarded by that
-    // probability test itself: with ANSI on, common-subexpression
-    // elimination would evaluate an unguarded division outside its `when`.
-    val popCols = Seq("pop" -> "E_population", "school" -> "E_school_age_population",
-      "infant" -> "E_infant_population", "adolescent" -> "E_adolescent_population")
+  def tileTotals(tileView: DataFrame): Map[Int, Row] = {
     val positive = col("probability") > 0
     def hasData(c: String): Column = col(c).isNotNull && !isnan(col(c)) && positive
     def actual(c: String): Column = when(positive, col(c) / col("probability"))
@@ -212,28 +182,155 @@ object Reports {
       count(when(hasData("E_smod_class"), lit(1))).as("smod_rows"),
       count(when(hasData("E_rwi"), lit(1))).as("rwi_rows")) ++
       buckets.flatMap { case (b, cond) =>
-        popCols.map { case (k, c) => sum(when(cond, col(c))).as(s"${b}_$k") }
+        PopCols.map { case (k, c) => sum(when(cond, col(c))).as(s"${b}_$k") }
       }
-    val totalsByWind = tileView.groupBy("wind_threshold").agg(tileAggs.head, tileAggs.tail: _*)
+    tileView.groupBy("wind_threshold").agg(tileAggs.head, tileAggs.tail: _*)
       .collect().map(r => r.getInt(0) -> r).toMap
+  }
 
-    val presentWinds = totalsByWind.keys.toSeq.sorted
-    if (presentWinds.isEmpty) return Map.empty
-    val expectedWind = if (presentWinds.contains(KeyForExpected)) KeyForExpected else presentWinds.min
+  /** The admin view's columns the per-admin rows and `maxWind` read: key ->
+    * view column. */
+  private val AdminCols = Seq("pop" -> "E_population", "school" -> "E_school_age_population",
+    "infant" -> "E_infant_population", "adolescent" -> "E_adolescent_population",
+    "schools" -> "E_num_schools", "hcs" -> "E_num_hcs", "shelters" -> "E_num_shelters",
+    "wash" -> "E_num_wash", "p" -> "probability")
+
+  /** The admin view's values per (admin, threshold), by [[AdminCols]] key
+    * (None for null). The view is one row per (admin, threshold)
+    * ([[ImpactPipeline.adminView]]'s groupBy), so its rows are collected as
+    * they are; rows sharing a key are summed on the driver, null only when
+    * all of them are. */
+  def adminRows(adminView: DataFrame): Map[(String, Int), Map[String, Option[Double]]] =
+    adminView.select(col("tile_id") +: col("wind_threshold") +: AdminCols.map(c => col(c._2)): _*)
+      .collect().toSeq
+      .groupMapReduce(r => (r.getString(0), r.getInt(1)))(r => AdminCols.indices.map(i => doubleOf(r.get(2 + i)))) {
+        (a, b) => a.zip(b).map { case (x, y) => if (x.isEmpty) y else Some(x.get + y.getOrElse(0.0)) }
+      }
+      .map { case (k, values) => k -> AdminCols.map(_._1).zip(values).toMap }
+
+  /** The CCI admin view's rows: the per-admin CCI values, whose sums are the
+    * country totals. */
+  def cciRows(cciAdmin: DataFrame): Seq[Row] = cciAdmin.collect().toSeq
+
+  /** The top-K facilities of `view` by probability at threshold `wind` (W1). */
+  def topFacilities(view: DataFrame, wind: Int): Seq[Row] =
+    view.filter(col("wind_threshold") === wind)
+      .orderBy(col("probability").desc)
+      .limit(Constants.TopK).collect().toSeq
+
+  /** (id, name) of each admin region, sorted by id: the order of the
+    * per-admin rows. */
+  def adminNames(admins: DataFrame): Seq[(String, String)] =
+    admins.select("id", "name").collect()
+      .map(r => (r.getString(0), r.getString(1))).sortBy(_._1).toSeq
+
+  /** The threshold of the expected keys and the top-K lists: 50 kt when
+    * present, else the least present one; None when none is. A facility
+    * view has the tile view's thresholds: both come from
+    * probabilityByThreshold(keepZeroRows = true) over the same envelopes. */
+  def expectedWind(totals: Map[Int, Row]): Option[Int] =
+    if (totals.contains(KeyForExpected)) Some(KeyForExpected) else totals.keys.minOption
+
+  /** Each facility kind's top-K keys: (kind, name column, type column, type
+    * key), in the order of the views [[publish]] takes. */
+  private val FacilityKinds = Seq(
+    ("school", "school_name", "education_level", "edulevel"),
+    ("hc", "name", "amenity", "type"),
+    ("shelter", "name", "shelter_type", "type"),
+    ("wash", "name", "wash_type", "type"))
+
+  /** A report input, and the outputs to start after before reading it: the
+    * one that fills its cache. */
+  private[pipeline] final case class Ready(df: DataFrame, after: Output[_]*)
+
+  /** Publishes each of the report's queries among `outputs`, once its input
+    * may be read (a top-K list also after the tile totals, which name its
+    * threshold), and the assembly once all of them are done; returns the
+    * assembly. `facilityViews` are the school, hc, shelter and wash views. */
+  private[pipeline] def publish(outputs: Outputs, tileView: Ready, adminView: Ready,
+                                facilityViews: Seq[Option[Ready]], cciAdmin: Ready,
+                                adminNames: Output[Seq[(String, String)]],
+                                tracks: Option[DataFrame], countryWkb: Option[Array[Byte]],
+                                country: String, storm: String, date: String,
+                                previous: => Map[String, Any],
+                                nowProvider: () => String = () => LocalDateTime.now().format(HumanFmt))
+      : Output[Map[String, Any]] = {
+    val totals = outputs.publish(tileView.after: _*)(tileTotals(tileView.df))
+    val admins = outputs.publish(adminView.after: _*)(adminRows(adminView.df))
+    val cci = outputs.publish(cciAdmin.after: _*)(cciRows(cciAdmin.df))
+    val landfall = outputs.publish()((tracks, countryWkb) match {
+      case (Some(t), Some(c)) => expectedLandfall(t, c, date)
+      case _ => "Unknown"
+    })
+    val top = facilityViews.map(_.map(v => outputs.publish(v.after :+ totals: _*)(
+      expectedWind(totals.get).fold(Seq.empty[Row])(topFacilities(v.df, _)))))
+    outputs.publish(Seq(totals, admins, cci, landfall, adminNames) ++ top.flatten: _*)(
+      assemble(totals.get, admins.get, cci.get, top.map(_.map(_.get)), adminNames.get,
+        landfall.get, country, storm, date, previous, nowProvider()))
+  }
+
+  /**
+   * The full report (reference do_report): the report's queries run
+   * concurrently, then [[assemble]]. DataFrame inputs follow the engine's
+   * long format (wind_threshold column instead of per-threshold dicts).
+   *
+   * @param cciTiles the CCI tile view; unread, since the country totals are
+   *                 the sums of `cciAdmin`'s rows (kept in the signature for
+   *                 callers that pass both CCI views).
+   * @param previous previous forecast's report (loaded by the caller from
+   *                 the T−6h JSON, J15) — change fields are computed from it.
+   */
+  def doReport(tileView: DataFrame, adminView: DataFrame,
+               schoolView: Option[DataFrame], hcView: Option[DataFrame],
+               shelterView: Option[DataFrame], washView: Option[DataFrame],
+               cciTiles: DataFrame, cciAdmin: DataFrame,
+               adminNames: Seq[(String, String)],
+               tracks: Option[DataFrame], countryWkb: Option[Array[Byte]],
+               country: String, storm: String, date: String,
+               previous: Map[String, Any] = Map.empty,
+               nowProvider: () => String = () => LocalDateTime.now().format(HumanFmt)): Map[String, Any] = {
+    val outputs = new Outputs
+    val report = publish(outputs, Ready(tileView), Ready(adminView),
+      Seq(schoolView, hcView, shelterView, washView).map(_.map(Ready(_))), Ready(cciAdmin),
+      outputs.publish()(adminNames), tracks, countryWkb, country, storm, date, previous, nowProvider)
+    outputs.run()
+    report.get
+  }
+
+  /**
+   * Assembles the report from the queries' results: an ordered key→value
+   * map, empty when there is no impact.
+   *
+   * @param totals   [[tileTotals]]
+   * @param admins   [[adminRows]]
+   * @param cciRows  [[cciRows]]
+   * @param top      each facility kind's [[topFacilities]] in
+   *                 [[FacilityKinds]] order; None for a kind with no view
+   * @param landfall [[expectedLandfall]]
+   */
+  def assemble(totals: Map[Int, Row], admins: Map[(String, Int), Map[String, Option[Double]]],
+               cciRows: Seq[Row], top: Seq[Option[Seq[Row]]],
+               adminNames: Seq[(String, String)], landfall: String,
+               country: String, storm: String, date: String,
+               previous: Map[String, Any], reportDate: String): Map[String, Any] = {
+    // a threshold's probability sum is the sum of its admins' values, null
+    // only when all of them are
+    val maxWind = maxWindOf(admins.toSeq.groupMap(_._1._2)(_._2("p"))
+      .map { case (w, ps) => w -> ps.flatten.reduceOption(_ + _) })
+    if (maxWind == 0) return Map.empty
+
+    val expWind = expectedWind(totals).getOrElse(return Map.empty)
 
     val d = scala.collection.mutable.LinkedHashMap[String, Any]()
     d += "country" -> country
     d += "storm" -> storm
     d += "forecast_date" -> humanDate(date)
     d += "storm_category" -> StormCategories(maxWind)
-    d += "expected_landfall" -> ((tracks, countryWkb) match {
-      case (Some(t), Some(c)) => expectedLandfall(t, c, date)
-      case _ => "Unknown"
-    })
+    d += "expected_landfall" -> landfall
     d += "next_forecast_date" -> futureDate(date, Constants.ForecastStepHours)
-    d += "report_date" -> nowProvider()
+    d += "report_date" -> reportDate
 
-    val exp = totalsByWind(expectedWind)
+    val exp = totals(expWind)
     val expSchool = ceilOrZero(exp.get(exp.fieldIndex("school")))
     val expInfant = ceilOrZero(exp.get(exp.fieldIndex("infant")))
     val expAdolescent = ceilOrZero(exp.get(exp.fieldIndex("adolescent")))
@@ -248,8 +345,7 @@ object Reports {
     d += "expected_shelters" -> ceilOrNull(exp.get(exp.fieldIndex("shelters")))
     d += "expected_wash" -> ceilOrNull(exp.get(exp.fieldIndex("wash")))
 
-    // per-admin CCI values and the country totals from ONE collect
-    val cciRows = cciAdmin.collect()
+    // per-admin CCI values, and the country totals as their sums
     val cciByAdmin = cciRows.map(r => r.getAs[String]("id") -> r).toMap
     def cciTotal(c: String): Long =
       cciRows.flatMap(r => doubleOf(r.getAs[Any](c))).reduceOption(_ + _).map(_.toLong).getOrElse(0L)
@@ -273,8 +369,8 @@ object Reports {
     }
 
     // per-wind expected/change keys
-    presentWinds.foreach { wind =>
-      val t = totalsByWind(wind)
+    totals.keys.toSeq.sorted.foreach { wind =>
+      val t = totals(wind)
       val sch = ceilOrZero(t.get(t.fieldIndex("school")))
       val inf = ceilOrZero(t.get(t.fieldIndex("infant")))
       val ado = ceilOrZero(t.get(t.fieldIndex("adolescent")))
@@ -309,37 +405,26 @@ object Reports {
       }
     }
 
-    // top-5 facilities by probability at the expected threshold (W1). A
-    // facility view has the tile view's thresholds: both come from
-    // probabilityByThreshold(keepZeroRows = true) over the same envelopes.
-    def topFacilities(view: Option[DataFrame], prefix: String,
-                      nameCol: String, typeCol: String, typeKey: String): Unit =
-      view.foreach { v =>
-        val top = v.filter(col("wind_threshold") === expectedWind)
-          .orderBy(col("probability").desc)
-          .limit(Constants.TopK).collect()
-        top.zipWithIndex.foreach { case (row, i) =>
-          def get(c: String): Any =
-            if (row.schema.fieldNames.contains(c)) row.getAs[Any](c) else ""
-          d += s"${prefix}_name_${i + 1}" -> get(nameCol)
-          d += s"${prefix}_${typeKey}_${i + 1}" -> get(typeCol)
-          d += s"${prefix}_prob_${i + 1}" -> row.getAs[Double]("probability")
-        }
+    // top-5 facilities by probability at the expected threshold (W1)
+    FacilityKinds.zip(top).foreach { case ((prefix, nameCol, typeCol, typeKey), rows) =>
+      rows.getOrElse(Nil).zipWithIndex.foreach { case (row, i) =>
+        def get(c: String): Any =
+          if (row.schema.fieldNames.contains(c)) row.getAs[Any](c) else ""
+        d += s"${prefix}_name_${i + 1}" -> get(nameCol)
+        d += s"${prefix}_${typeKey}_${i + 1}" -> get(typeCol)
+        d += s"${prefix}_prob_${i + 1}" -> row.getAs[Double]("probability")
       }
-    topFacilities(schoolView, "school", "school_name", "education_level", "edulevel")
-    topFacilities(hcView, "hc", "name", "amenity", "type")
-    topFacilities(shelterView, "shelter", "name", "shelter_type", "type")
-    topFacilities(washView, "wash", "name", "wash_type", "type")
+    }
 
     // vulnerability metrics at the expected threshold, from the tile pass
     Seq("smod_rows" -> Seq("urban", "rural"), "rwi_rows" -> Seq("poverty", "severe"))
       .foreach { case (rows, names) =>
         val noData = exp.getAs[Long](rows) == 0
-        for (b <- names; (k, _) <- popCols)
+        for (b <- names; (k, _) <- PopCols)
           d += s"expected_${k}_$b" -> (if (noData) null else intOrZero(exp.getAs[Any](s"${b}_$k")))
       }
 
-    // per-admin rows from the admin pass
+    // per-admin rows
     def prevRows(key: String): Seq[Map[String, Any]] = previous.get(key) match {
       case Some(s: Seq[_]) => s.collect { case m: Map[_, _] => m.asInstanceOf[Map[String, Any]] }
       case _ => Nil
@@ -368,17 +453,15 @@ object Reports {
       val washW = scala.collection.mutable.LinkedHashMap[String, Any]("name" -> adminName)
 
       Winds.foreach { wind =>
-        adminAgg.get((adminId, wind)) match {
+        admins.get((adminId, wind)) match {
           case None =>
             pop += wind.toString -> 0L; school += wind.toString -> 0L
             infant += wind.toString -> 0L; adolescent += wind.toString -> 0L
             schoolsW += wind.toString -> null; hcsW += wind.toString -> null
             sheltersW += wind.toString -> null; washW += wind.toString -> null
           case Some(r) =>
-            def num(c: String): Long =
-              Option(r.getAs[Any](c)).map(_.asInstanceOf[Number].doubleValue().toLong).getOrElse(0L)
-            def opt(c: String): Any =
-              Option(r.getAs[Any](c)).map(_.asInstanceOf[Number].doubleValue().toLong: Any).orNull
+            def num(c: String): Long = r(c).map(_.toLong).getOrElse(0L)
+            def opt(c: String): Any = r(c).map(_.toLong: Any).orNull
             pop += wind.toString -> num("pop"); school += wind.toString -> num("school")
             infant += wind.toString -> num("infant"); adolescent += wind.toString -> num("adolescent")
             schoolsW += wind.toString -> opt("schools"); hcsW += wind.toString -> opt("hcs")

@@ -1,6 +1,7 @@
 package graft.io
 
 import graft.SparkSpec
+import graft.llm.Dedup
 import graft.pipeline.{CountryRegistry, Jobs, SyntheticScenario}
 import graft.streaming.Streaming
 import org.apache.hadoop.fs.RawLocalFileSystem
@@ -198,14 +199,35 @@ class StoreFsSpec extends SparkSpec {
     assert(spark.read.parquet(in.toString).count() == 14)
   }
 
-  test("no file under graft/io or graft/pipeline but NioLocalFs names java.nio.file, java.io.File or Source.fromFile") {
+  test("on a graftfs:// root the signature index probe sees the index's pfx= partitions") {
+    val tmp = Files.createTempDirectory("graft-index")
+    onFs("graftfs", classOf[GraftFs]) { ss =>
+      val dir = s"graftfs://$tmp/index"
+      assert(!Dedup.signatureIndexExists(dir))
+      ss.range(4).withColumn("pfx", col("id") % 2).write.partitionBy("pfx").parquet(dir)
+      assert(Dedup.signatureIndexExists(dir))
+    }
+  }
+
+  /** The files under the given `graft` source dirs, but NioLocalFs, that
+    * name java.nio.file, java.io.File or Source.fromFile. */
+  private def localOnlyFiles(dirs: String*): Set[String] = {
     val needle = """java\.nio\.file|java\.io\.File\b|Source\.fromFile""".r
-    val found = Seq("io", "pipeline").flatMap { d =>
+    dirs.flatMap { d =>
       Files.walk(Paths.get(s"src/main/scala/graft/$d")).iterator().asScala
         .filter(_.toString.endsWith(".scala")).toSeq
     }.filterNot(_.getFileName.toString == "NioLocalFs.scala")
       .filter(p => needle.findFirstIn(Files.readString(p)).isDefined)
       .map(_.getFileName.toString).toSet
+  }
+
+  test("no file under graft/io or graft/pipeline but NioLocalFs names java.nio.file, java.io.File or Source.fromFile") {
+    val found = localOnlyFiles("io", "pipeline")
+    assert(found.isEmpty, s"local-only file access beside store paths: $found")
+  }
+
+  test("no file under graft/llm or graft/streaming names java.nio.file, java.io.File or Source.fromFile") {
+    val found = localOnlyFiles("llm", "streaming")
     assert(found.isEmpty, s"local-only file access beside store paths: $found")
   }
 }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import graft.geo.Geo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -140,5 +141,54 @@ class ReportsSpec extends SparkSpec {
     val none = SyntheticScenario.tracks(spark, members = 2).filter(lit(false))
     val country = graft.geo.Geo.toWkb(graft.geo.Geo.box(-72.2, 18.8, -71.7, 19.2))
     assert(Reports.expectedLandfall(none, country, "20260801000000") == "Unknown")
+  }
+
+  /** The country of the landfall cases: the box (0, 0)–(10, 10). */
+  private val landfallCountry = Geo.toWkb(Geo.box(0, 0, 10, 10))
+  private val landfallDate = "20260801000000"
+
+  /** Track points (member, lead time in hours, point), in the given order;
+    * `valid_time` is the forecast time plus the lead time. */
+  private def landfall(points: (Option[Int], Int, Option[(Double, Double)])*): String = {
+    val t0 = java.sql.Timestamp.valueOf("2026-08-01 00:00:00").getTime
+    val tracks = points.map { case (member, lead, point) =>
+      (member, new java.sql.Timestamp(t0 + lead * 3600L * 1000), lead,
+        point.map { case (lon, lat) => Geo.toWkb(Geo.point(lon, lat)) })
+    }.toDF("ensemble_member", "valid_time", "lead_time", "geometry")
+    Reports.expectedLandfall(tracks, landfallCountry, landfallDate)
+  }
+  private def at(lead: Int): String = Reports.futureDate(landfallDate, lead)
+
+  test("expected landfall: a member's first point inside the country wins over an earlier crossing") {
+    assert(landfall((Some(1), 6, Some((-5.0, 5.0))), (Some(1), 12, Some((5.0, 5.0))),
+      (Some(1), 18, Some((15.0, 5.0)))) == at(12))
+  }
+
+  test("expected landfall: a member that only crosses lands at its crossing segment's first point") {
+    assert(landfall((Some(1), 6, Some((-5.0, 5.0))), (Some(1), 12, Some((15.0, 5.0))),
+      (Some(1), 18, Some((15.0, 20.0)))) == at(6))
+  }
+
+  test("expected landfall: every member inside at lead 0 has already landed") {
+    assert(landfall((Some(1), 0, Some((5.0, 5.0))), (Some(2), 0, Some((-5.0, 5.0))),
+      (Some(2), 6, Some((15.0, 5.0)))) == "Already landed")
+  }
+
+  test("expected landfall: points are taken in valid_time order, not in row order") {
+    // in time order member 1 goes north, then east, and never meets the
+    // country; in row order its first segment would cut across it
+    assert(landfall((Some(1), 12, Some((15.0, 20.0))), (Some(1), 0, Some((-5.0, 5.0))),
+      (Some(1), 6, Some((-5.0, 20.0))), (Some(2), 6, Some((5.0, 5.0)))) == at(6))
+  }
+
+  test("expected landfall: a null geometry is neither inside nor the end of a crossing segment") {
+    assert(landfall((Some(1), 0, Some((-5.0, 5.0))), (Some(1), 6, None),
+      (Some(1), 12, Some((15.0, 5.0))), (Some(2), 18, Some((5.0, 5.0)))) == at(18))
+  }
+
+  test("expected landfall: members landing at different leads give the earliest-latest range") {
+    // the null-member points are one member of their own
+    assert(landfall((Some(1), 6, Some((5.0, 5.0))), (None, 12, Some((-5.0, 5.0))),
+      (None, 18, Some((15.0, 5.0))), (Some(2), 24, Some((-5.0, 5.0)))) == s"${at(6)} – ${at(12)}")
   }
 }
