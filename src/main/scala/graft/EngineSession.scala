@@ -31,7 +31,10 @@ import org.apache.spark.sql.SparkSession
   *     some generations, which Spark reads only as a long under this
   *     legacy conf (`graft.gates.GateInputs` truncates it to micros).
   *
-  * The session also gets the geo and text functions and one log level.
+  * The builder also installs [[graft.geo.GraftExtensions]], so every
+  * session it builds, and every `newSession()` sibling of one, resolves
+  * the `ST_*` and text functions and plans spatial joins with
+  * [[graft.plans.SpatialJoinStrategy]], with no per-session call.
   */
 object EngineSession {
 
@@ -52,22 +55,17 @@ object EngineSession {
   /** A builder carrying the profile, for callers that add settings. */
   def builder(appName: String, master: String, cores: Int): SparkSession.Builder =
     graft.io.NioLocalFs.configure(SparkSession.builder()
-      .master(master).appName(appName).config(settings(cores)))
-
-  /** Registers the session's functions and sets its log level. */
-  def init(spark: SparkSession, logLevel: String): SparkSession = {
-    spark.sparkContext.setLogLevel(logLevel)
-    graft.geo.GeoFunctions.ensureRegistered(spark)
-    spark
-  }
+      .master(master).appName(appName).config(settings(cores))
+      .withExtensions(new graft.geo.GraftExtensions))
 
   /** The session on `master`. With `scratch`, spills, stream checkpoints
     * and state stores go to [[scratchDir]]. */
   def start(appName: String, logLevel: String = "WARN",
             scratch: Boolean = false): SparkSession = {
     val b = builder(appName, master, cores)
-    init((if (scratch) b.config("spark.local.dir", scratchDir()) else b)
-      .getOrCreate(), logLevel)
+    val spark = (if (scratch) b.config("spark.local.dir", scratchDir()) else b).getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
   }
 
   /** Stream checkpoints, state stores, microbatch drops and shuffle spills

@@ -15,7 +15,6 @@ object SparkEntry {
 
   /** Flagship: full storm impact slice on the synthetic country. */
   def entry(spark: SparkSession): DataFrame = {
-    graft.geo.GeoFunctions.ensureRegistered(spark)
     val tiles = SyntheticScenario.tiles(spark, nx = 24, ny = 24)
     val envs = SyntheticScenario.envelopes(spark, members = 51)
     ImpactPipeline.tileView(tiles, envs)

@@ -15,8 +15,6 @@ object GateInputs {
   /** A test table, `$dir/$name.parquet`. Read `events` only
     * through here or [[eventsStream]]: both adapt its `ts` column. */
   private[gates] def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // the ST_* wrappers resolve against the session registry (idempotent)
-    graft.geo.GeoFunctions.ensureRegistered(spark)
     val raw = spark.read.parquet(s"$dir/$name.parquet")
     if (name == "events") eventsTs(raw) else raw
   }

@@ -513,12 +513,8 @@ object GeoGates {
       // the custom planner path: plain join(st_intersects) planned as
       // BroadcastSpatialJoinExec (graft.plans.SpatialJoinStrategy); result
       // hash-checked against the same interval-arithmetic oracle as g01.
-      // Planned on a sibling session of its own, so the strategy stays out
-      // of the caller's planner (`t` registers the functions there).
-      val ss = s.newSession()
-      ss.experimental.extraStrategies = Seq(graft.plans.SpatialJoinStrategy)
-      val tiles = geoTiles(ss, d).select(col("tile_id"), col("geometry").as("tgeom"))
-      val envs = geoEnvelopes(ss, d).select(col("wind_threshold"), col("geometry").as("egeom"))
+      val tiles = geoTiles(s, d).select(col("tile_id"), col("geometry").as("tgeom"))
+      val envs = geoEnvelopes(s, d).select(col("wind_threshold"), col("geometry").as("egeom"))
       tiles.join(envs, call_function("st_intersects", col("tgeom"), col("egeom")))
         .groupBy(col("tile_id"), col("wind_threshold"))
         .agg(count(lit(1)).as("n_members"))

@@ -52,7 +52,6 @@ object StreamingGates {
       // Converges to batch screening exactly — shares d67's oracle.
       import org.apache.spark.sql.types._
       val ss = graft.streaming.Streaming.statefulSession(s)
-      graft.geo.GeoFunctions.ensureRegistered(ss)
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType),
         StructField("lang", StringType), StructField("source", StringType),
@@ -356,7 +355,6 @@ object StreamingGates {
       // by md5(text), identical whichever twin the state store kept
       import org.apache.spark.sql.types._
       val ss = graft.streaming.Streaming.statefulSession(s)
-      graft.geo.GeoFunctions.ensureRegistered(ss)
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType),
         StructField("lang", StringType), StructField("source", StringType),

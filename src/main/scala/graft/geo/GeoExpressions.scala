@@ -1,6 +1,6 @@
 package graft.geo
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, QuaternaryExpression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, QuaternaryExpression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -14,8 +14,11 @@ import org.locationtech.jts.geom.Geometry
  * evaluation stays `CodegenFallback` (a hand-written doGenCode would only
  * wrap the same JTS call).
  *
+ * The expressions that take numbers declare their input types, so an
+ * integral or decimal argument is cast to the declared type at analysis.
+ *
  * Registered for SQL by [[GraftExtensions]]; Column-API wrappers in
- * [[GeoFunctions.native]].
+ * [[GeoFunctions]].
  */
 object GeoExpressions {
 
@@ -37,7 +40,8 @@ object GeoExpressions {
   }
 
   case class StPoint(left: Expression, right: Expression)
-      extends BinaryExpression with CodegenFallback {
+      extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
+    override def inputTypes: Seq[DataType] = Seq(DoubleType, DoubleType)
     override def dataType: DataType = BinaryType
     override def nullSafeEval(lon: Any, lat: Any): Any =
       Geo.toWkb(Geo.point(lon.asInstanceOf[Double], lat.asInstanceOf[Double]))
@@ -88,7 +92,8 @@ object GeoExpressions {
   }
 
   case class StBufferMeters(left: Expression, right: Expression)
-      extends BinaryExpression with CodegenFallback {
+      extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
+    override def inputTypes: Seq[DataType] = Seq(BinaryType, DoubleType)
     override def dataType: DataType = BinaryType
     override def nullSafeEval(b: Any, m: Any): Any =
       // dateline-aware: identity vs bufferMeters away from ±180°
@@ -108,7 +113,8 @@ object GeoExpressions {
   }
 
   case class StDWithinMeters(first: Expression, second: Expression, third: Expression)
-      extends TernaryExpression with CodegenFallback {
+      extends TernaryExpression with ImplicitCastInputTypes with CodegenFallback {
+    override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType, DoubleType)
     override def dataType: DataType = BooleanType
     override def nullSafeEval(a: Any, b: Any, m: Any): Any =
       Geo.distanceMeters(geom(a), geom(b)) <= m.asInstanceOf[Double]
@@ -188,7 +194,8 @@ object GeoExpressions {
   }
 
   case class StBox(first: Expression, second: Expression, third: Expression, fourth: Expression)
-      extends QuaternaryExpression with CodegenFallback {
+      extends QuaternaryExpression with ImplicitCastInputTypes with CodegenFallback {
+    override def inputTypes: Seq[DataType] = Seq.fill(4)(DoubleType)
     override def dataType: DataType = BinaryType
     override def nullSafeEval(minLon: Any, minLat: Any, maxLon: Any, maxLat: Any): Any =
       Geo.toWkb(Geo.box(minLon.asInstanceOf[Double], minLat.asInstanceOf[Double],
@@ -208,7 +215,8 @@ object GeoExpressions {
 
   /** Quadkey cell id of a (lon, lat) at a zoom — pure arithmetic. */
   case class StQuadkey(first: Expression, second: Expression, third: Expression)
-      extends TernaryExpression with CodegenFallback {
+      extends TernaryExpression with ImplicitCastInputTypes with CodegenFallback {
+    override def inputTypes: Seq[DataType] = Seq(DoubleType, DoubleType, IntegerType)
     override def dataType: DataType = StringType
     override def nullSafeEval(lon: Any, lat: Any, zoom: Any): Any =
       UTF8String.fromString(Quadkey.quadkeyForLonLat(
@@ -285,34 +293,34 @@ object GeoExpressions {
     "st_box" -> (es => StBox(es(0), es(1), es(2), es(3))),
     "st_quadkey_polygon" -> (es => StQuadkeyPolygon(es.head)),
     "st_quadkey" -> (es => StQuadkey(es(0), es(1), es(2))))
-
-  /** Register the ST family on an existing session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    registry.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
-    }
 }
 
 /**
- * SparkSessionExtensions installer:
- * `SparkSession.builder().withExtensions(new GraftExtensions)` — or
- * `--conf spark.sql.extensions=graft.geo.GraftExtensions` on
- * spark-submit — injects EVERYTHING the library adds to a session into
- * every session on the cluster: the ST_ geometry family, the native
- * text kernels (ws_token_count/simhash64/winnow_keys/normalize_text/
- * jaro_winkler), and the broadcast spatial-join planner strategy. This
- * is the one hook a cluster operator configures (README "Deploying on a
- * real cluster"); nothing else needs per-session registration calls.
+ * SparkSessionExtensions installer: injects everything the library adds
+ * to a session, into that session and all its `newSession()` siblings:
+ * the ST_ geometry family, the native text kernels
+ * (ws_token_count/simhash64/winnow_keys/normalize_text/jaro_winkler/
+ * aho_first/aho_count), and the broadcast spatial-join planner strategy.
+ * `graft.EngineSession.builder` installs it on every engine session. An
+ * application that builds its own session adds
+ * `.withExtensions(new GraftExtensions)`, or
+ * `--conf spark.sql.extensions=graft.geo.GraftExtensions` on spark-submit
+ * (README "Deploying on a real cluster").
  */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    (GeoExpressions.registry ++ graft.llm.TextExpressions.registry)
-      .foreach { case (name, builder) =>
-        e.injectFunction((
-          org.apache.spark.sql.catalyst.FunctionIdentifier(name),
-          new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft.geo.GeoExpressions", name),
-          builder))
-      }
+    GraftExtensions.functions.foreach { case (name, builder) =>
+      e.injectFunction((
+        org.apache.spark.sql.catalyst.FunctionIdentifier(name),
+        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft.geo.GeoExpressions", name),
+        builder))
+    }
     e.injectPlannerStrategy(_ => graft.plans.SpatialJoinStrategy)
   }
+}
+
+object GraftExtensions {
+  /** Every function the extension injects: name -> builder. */
+  val functions: Seq[(String, Seq[Expression] => Expression)] =
+    GeoExpressions.registry ++ graft.llm.TextExpressions.registry
 }

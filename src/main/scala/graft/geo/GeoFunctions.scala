@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
  * function registry) — no Scala-UDF serialization boundary, null-intolerant
  * short-circuiting for free, and join conditions written with these
  * wrappers are recognized by `graft.plans.SpatialJoinStrategy`. Sessions
- * built with [[GraftExtensions]] have the family pre-registered; any other
- * session just needs one [[ensureRegistered]] call (idempotent, and invoked
- * by the engine's own entry points).
+ * built by `graft.EngineSession` carry [[GraftExtensions]], which injects
+ * the family; a session built any other way needs one [[ensureRegistered]]
+ * call.
  *
  * The hot broadcast-spatial-join path deliberately does NOT go through
  * per-row wrappers — see graft.ops.SpatialJoin, which prepares JTS objects
@@ -25,12 +25,14 @@ import org.apache.spark.sql.functions._
  */
 object GeoFunctions {
 
-  /** Register the ST_* family and the native text expressions on `spark`
-    * (idempotent, cheap). */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    GeoExpressions.register(spark)
-    graft.llm.TextExpressions.register(spark)
-  }
+  /** Registers the functions [[GraftExtensions]] injects as temp functions
+    * on `spark`, a session built without the extension (idempotent, cheap).
+    * Temp functions do not reach its `newSession()` siblings, and the
+    * spatial-join strategy is not installed. */
+  def ensureRegistered(spark: SparkSession): Unit =
+    GraftExtensions.functions.foreach { case (name, builder) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
 
   /** Column sugar over the native expression family. */
   def st_geomFromWKT(c: Column): Column = call_function("st_geomfromwkt", c)

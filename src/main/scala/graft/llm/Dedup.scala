@@ -456,11 +456,9 @@ object Dedup {
     * 64-bit hashes, folded in one pass by the NATIVE codegen'd expression
     * ([[TextExpressions.Simhash64]] — stays inside whole-stage codegen, no
     * UDF boundary; `call_function` resolves against the session registry,
-    * populated by GeoFunctions.ensureRegistered). */
-  def simhash64(text: Column): Column = {
-    TextExpressions.ensureActive()
+    * where `graft.geo.GraftExtensions` injects it). */
+  def simhash64(text: Column): Column =
     call_function("simhash64", text)
-  }
 
   /** SimHash near-dup pairs: band the 64-bit signature into `maxHamming + 1`
     * chunks (pigeonhole: a pair within Hamming distance `maxHamming` differs
@@ -476,7 +474,6 @@ object Dedup {
                    maxHamming: Int = 3): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 15,
       s"maxHamming=$maxHamming: chunks of 64/(maxHamming+1) bits lose bucketing power past 15")
-    TextExpressions.ensureOn(df)
     val nChunks = maxHamming + 1
     // distribute 64 bits as evenly as possible across the chunks
     val widths = Array.tabulate(nChunks)(i => 64 / nChunks + (if (i < 64 % nChunks) 1 else 0))
@@ -718,7 +715,6 @@ object Dedup {
   def winnowPairs(df: DataFrame, idCol: String, textCol: String = "text",
                   k: Int = 16, w: Int = 4, minShared: Int = 3,
                   maxBucketSize: Int = 1000): DataFrame = {
-    TextExpressions.ensureOn(df)
     val fps = df.select(col(idCol).as("id"),
         regexp_replace(lower(col(textCol)), "[^a-z0-9]", "").as("__s"))
       .select(col("id"),

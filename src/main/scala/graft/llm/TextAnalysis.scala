@@ -27,20 +27,16 @@ object TextAnalysis {
     * `size(tokens(text))` exactly (incl. the empty-string -> 1 regex-split
     * quirk) at a fraction of the cost — the hot denominator for corpus
     * quality filtering. */
-  def wsTokenCount(text: Column): Column = {
-    TextExpressions.ensureActive()
+  def wsTokenCount(text: Column): Column =
     call_function("ws_token_count", text)
-  }
 
   /** Canonical corpus text normalization (NFC → strip accents → casefold →
     * collapse whitespace) via the native codegen'd
     * [[TextExpressions.NormalizeText]] — the cleaning step run before
     * hashing/dedup so "Café" and "cafe " collide. d51-oracle-pinned
     * byte-compatible with DuckDB's strip_accents/nfc_normalize pipeline. */
-  def normalizeText(text: Column): Column = {
-    TextExpressions.ensureActive()
+  def normalizeText(text: Column): Column =
     call_function("normalize_text", text)
-  }
 
   /** Jaro-Winkler similarity between two string columns via the native
     * codegen'd [[TextExpressions.JaroWinkler]] — the record-linkage field
@@ -50,10 +46,8 @@ object TextAnalysis {
     * (DuckDB compares UTF-8 bytes, this kernel UTF-16 chars — multi-byte
     * codepoints diverge; normalize/transliterate first for accented
     * names). */
-  def jaroWinkler(a: Column, b: Column): Column = {
-    TextExpressions.ensureActive()
+  def jaroWinkler(a: Column, b: Column): Column =
     call_function("jaro_winkler", a, b)
-  }
 
   /** First-priority blocklist hit over `patterns` (list order = priority)
     * via the native single-pass [[TextExpressions.AhoFirstMatch]] automaton:
@@ -61,17 +55,13 @@ object TextAnalysis {
     * Equivalent to `CASE WHEN contains(p1) ... WHEN contains(pK)` but reads
     * each document ONCE regardless of pattern count — the only blocklist
     * shape that survives a 100 TB corpus with a real (1k+ phrase) list. */
-  def blocklistFirstHit(text: Column, patterns: Seq[String]): Column = {
-    TextExpressions.ensureActive()
+  def blocklistFirstHit(text: Column, patterns: Seq[String]): Column =
     call_function("aho_first", text, lit(patterns.toArray))
-  }
 
   /** Count of DISTINCT blocklist patterns present in `text`, one automaton
     * pass — see [[blocklistFirstHit]]. */
-  def blocklistHitCount(text: Column, patterns: Seq[String]): Column = {
-    TextExpressions.ensureActive()
+  def blocklistHitCount(text: Column, patterns: Seq[String]): Column =
     call_function("aho_count", text, lit(patterns.toArray))
-  }
 
   /**
    * HASHED-LINEAR quality scorer — the fastText-style MODEL-BASED filter
@@ -151,7 +141,6 @@ object TextAnalysis {
    * heuristic pre-filters for LLM training corpora): one narrow projection.
    */
   def qualityMetrics(df: DataFrame, textCol: String = "text"): DataFrame = {
-    TextExpressions.ensureOn(df)
     val t = col(textCol)
     val nTokens = wsTokenCount(t)
     df.withColumn("n_chars_computed", length(t))

@@ -358,20 +358,4 @@ object TextExpressions {
       foldableStringArray(es(1), "aho_first patterns"))),
     "aho_count" -> (es => AhoMatchCount(es.head,
       foldableStringArray(es(1), "aho_count patterns"))))
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    registry.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-
-  /** Best-effort self-registration so the Column helpers work without the
-    * caller invoking ensureRegistered: temp-function registrations do NOT
-    * propagate to `newSession()` clones, so every DataFrame-taking operator
-    * registers on ITS OWN session and the Column-only helpers register on
-    * the active one. */
-  private[llm] def ensureOn(df: org.apache.spark.sql.DataFrame): Unit =
-    register(df.sparkSession)
-
-  private[llm] def ensureActive(): Unit =
-    org.apache.spark.sql.SparkSession.getActiveSession.foreach(register)
 }

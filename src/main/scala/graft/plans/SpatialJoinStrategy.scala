@@ -31,9 +31,8 @@ import org.locationtech.jts.index.strtree.STRtree
  * [[graft.ops.SpatialJoin.quadkeyRefineJoin]], the shuffle-based
  * filter-refine join for two large sides.
  *
- * Activate on a live session with
- * `spark.experimental.extraStrategies = Seq(SpatialJoinStrategy)`
- * or for all sessions via [[graft.geo.GraftExtensions]].
+ * Installed by [[graft.geo.GraftExtensions]], which every
+ * `graft.EngineSession` session and its `newSession()` siblings carry.
  */
 object SpatialJoinStrategy extends SparkStrategy {
 

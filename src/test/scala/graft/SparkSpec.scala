@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one per JVM). */
 object TestSpark {
-  lazy val spark: SparkSession = EngineSession.init(
-    EngineSession.builder("graft-test", "local[4]", 4)
+  lazy val spark: SparkSession = {
+    val s = EngineSession.builder("graft-test", "local[4]", 4)
       // bucketed-table suites write managed tables; keep them out of the repo
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
@@ -16,7 +16,10 @@ object TestSpark {
       // plan a real corpus gets. Results are spread-invariant; SpreadSpec
       // toggles this to cover the narrow-regime behaviour.
       .config("spark.graft.spread", "false")
-      .getOrCreate(), "WARN")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -1,13 +1,12 @@
 package graft.geo
 
 import graft.SparkSpec
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class GeoExpressionsSpec extends SparkSpec {
 
   import spark.implicits._
-
-  GeoExpressions.register(spark)
 
   test("SQL-registered ST functions evaluate like the kernel") {
     val row = spark.sql(
@@ -50,6 +49,22 @@ class GeoExpressionsSpec extends SparkSpec {
     assert(row.getString(0) == "POINT (-72.5 18.5)")
     assert(row.getString(1) == "POINT (3.25 -4.75)")
     assert(row.getDouble(2) == -3.25)
+  }
+
+  test("integral and decimal arguments evaluate like doubles") {
+    import GeoFunctions._
+    def views(lon: Column, lat: Column, m: Column) = Seq(
+      st_asWKT(st_point(lon, lat)),
+      st_asWKT(st_box(lon, lat, lon + 1, lat + 1)),
+      st_quadkey(lon, lat, lit(14)),
+      st_asWKT(st_buffer_m(st_point(lon, lat), m)),
+      st_dwithin_m(st_point(lon, lat), st_point(lat, lon), m))
+    val ids = spark.range(3).withColumn("m", $"id" * 100000)
+    val got = ids.select(views($"id", $"id" * 2, $"m"): _*).collect().toSeq
+    val want = ids.select(views($"id".cast("double"), ($"id" * 2).cast("double"),
+      $"m".cast("double")): _*).collect().toSeq
+    assert(got == want)
+    assert(spark.sql("SELECT st_aswkt(st_point(1, 2.5))").head().getString(0) == "POINT (1 2.5)")
   }
 
   test("null propagation: null input -> null output") {

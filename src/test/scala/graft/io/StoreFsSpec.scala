@@ -76,7 +76,6 @@ class StoreFsSpec extends SparkSpec {
   private def onFs[A](scheme: String, impl: Class[_ <: GraftFs])(body: SparkSession => A): A = {
     val ss = spark.newSession()
     ss.conf.set(s"fs.$scheme.impl", impl.getName)
-    graft.geo.GeoFunctions.ensureRegistered(ss)
     val previous = SparkSession.getActiveSession
     SparkSession.setActiveSession(ss)
     try body(ss)

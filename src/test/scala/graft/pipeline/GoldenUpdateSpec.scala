@@ -173,7 +173,6 @@ class GoldenUpdateSpec extends SparkSpec {
     store // both forecasts have run, so the update below is warm
     val wide = spark.newSession()
     wide.conf.set("spark.sql.shuffle.partitions", "64")
-    graft.geo.GeoFunctions.ensureRegistered(wide)
     val sc = spark.sparkContext
     val stages = new ConcurrentLinkedQueue[(String, Int)]()
     val listener = new SparkListener {

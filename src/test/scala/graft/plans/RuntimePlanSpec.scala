@@ -92,7 +92,6 @@ class RuntimePlanSpec extends SparkSpec {
     // then an envelope-screened read lists ONLY the covered partitions —
     // static pruning, before any file IO
     import org.apache.spark.sql.execution.FileSourceScanLike
-    graft.geo.GeoFunctions.ensureRegistered(spark)
     val root = java.nio.file.Files.createTempDirectory("qkuniverse").toString
     val store = new graft.io.DataStore(root)
     // the g01 grid: 1600 tiles over [0, 1.25)², centers at cell midpoints

@@ -7,14 +7,9 @@ import org.apache.spark.sql.functions._
 
 class SpatialJoinStrategySpec extends SparkSpec {
 
-  // the strategy goes on a sibling session of this spec's own, so the
-  // shared session's planner stays as every other suite expects it
-  override lazy val spark: SparkSession = {
-    val s = TestSpark.spark.newSession()
-    GeoFunctions.ensureRegistered(s)
-    s.experimental.extraStrategies = Seq(SpatialJoinStrategy)
-    s
-  }
+  // a sibling session of this spec's own, so its broadcast-threshold
+  // change stays out of the shared session's conf
+  override lazy val spark: SparkSession = TestSpark.spark.newSession()
 
   import spark.implicits._
 
