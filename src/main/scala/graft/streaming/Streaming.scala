@@ -28,7 +28,7 @@ object Streaming {
 
   /**
    * (label, checkpointDir) for every stream this JVM has run to completion
-   * through the helpers below — the stream scale sweep (StreamSweep) reads
+   * through the helpers below — the scale sweep (ScaleSweep) reads
    * FINAL state-store row counts from these via the `statestore` source, so
    * the documented per-stream state bounds (O(keys), O(open sessions),
    * O(in-flight window)) become measured numbers instead of prose. Cleared

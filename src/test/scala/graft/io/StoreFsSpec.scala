@@ -208,6 +208,37 @@ class StoreFsSpec extends SparkSpec {
     }
   }
 
+  test("on a graftfs:// root the sweep's scaled set is built all or nothing, and its probe finds it") {
+    val tmp = Files.createTempDirectory("graft-sweep")
+    // a three-row base: each table with the key columns the copies shift
+    val keys = Map("region" -> Seq("r_regionkey"), "nation" -> Seq("n_nationkey"),
+      "customer" -> Seq("c_custkey"), "supplier" -> Seq("s_suppkey"),
+      "part" -> Seq("p_partkey"), "orders" -> Seq("o_orderkey", "o_custkey"),
+      "lineitem" -> Seq("l_orderkey", "l_partkey", "l_suppkey"),
+      "events" -> Seq("event_id", "user_id"), "documents" -> Seq("doc_id"),
+      "embeddings" -> Seq("vec_id"))
+    def base(name: String, tables: Set[String]): String = {
+      tables.foreach(t => spark.range(3).select(keys(t).map(col("id").as(_)): _*)
+        .write.parquet(s"$tmp/$name/$t.parquet"))
+      s"graftfs://$tmp/$name"
+    }
+    // a base without nation fails inside the build
+    val partial = base("partial", keys.keySet - "nation")
+    val full = base("full", keys.keySet)
+    onFs("graftfs", classOf[GraftFs]) { ss =>
+      val out = s"graftfs://$tmp/sf"
+      intercept[Exception](graft.ScaleSweep.buildScaled(ss, partial, out, copies = 2))
+      assert(!graft.ScaleSweep.scaledBuilt(ss, out))
+      assert(ls(tmp) == Set("partial", "full"))
+      graft.ScaleSweep.buildScaled(ss, full, out, copies = 2)
+      assert(graft.ScaleSweep.scaledBuilt(ss, out))
+      assert(ss.read.parquet(s"$out/lineitem.parquet").count() == 6)
+    }
+    assert(ls(tmp) == Set("partial", "full", "sf"))
+    assert(ls(tmp.resolve("sf")) == keys.keySet.map(t => s"$t.parquet"))
+    assert(!Files.exists(Paths.get("graftfs:")))
+  }
+
   /** The files under the given `graft` source dirs, but NioLocalFs, that
     * name java.nio.file, java.io.File or Source.fromFile. */
   private def localOnlyFiles(dirs: String*): Set[String] = {
