@@ -223,8 +223,8 @@ object Main {
     val countries = resolveCountries(spark, store, args)
     if (args.skipAnalysis) {
       val runs = Orchestrator.selectStorms(catalog, args.timeDelta,
-        java.time.LocalDate.now(), args.date, args.storm).collect()
-      runs.foreach(r => println(s"[main] would process storm=${r.getString(0)} forecast=${r.getString(1)}"))
+        java.time.LocalDate.now(), args.date, args.storm)
+      runs.foreach(r => println(s"[main] would process storm=${r.storm} forecast=${r.date}"))
       println(s"[main] --skip-analysis: ${runs.length} runnable (storm, forecast) pairs, nothing processed")
       return true
     }
@@ -233,12 +233,10 @@ object Main {
       .map(r => r.getString(0) -> Option(r.getAs[Array[Byte]](1))).toMap
     val stats = Orchestrator.updateStorms(spark, store, catalog, countries,
       args.zoom,
-      envelopesFor = (_, storm, date) =>
-        ingest(spark, store, s"envelopes/${storm}_$date.parquet"),
-      tracksFor = (storm, date) =>
-        if (hasIngest(store, s"tracks/${storm}_$date.parquet"))
-          Some(ingest(spark, store, s"tracks/${storm}_$date.parquet"))
-        else None,
+      envelopesFor = (_, run) =>
+        ingest(spark, store, s"envelopes/${run.storm}_${run.date}.parquet"),
+      tracksFor = run => Some(s"tracks/${run.storm}_${run.date}.parquet")
+        .filter(hasIngest(store, _)).map(ingest(spark, store, _)),
       boundaryFor = c => boundaries.getOrElse(c, None),
       rewrite = args.rewrite, timeDeltaDays = args.timeDelta,
       targetDate = args.date, targetStorm = args.storm)

@@ -2,7 +2,7 @@ package graft
 
 import graft.geo.Geo
 import graft.io.DataStore
-import graft.pipeline.{Jobs, SyntheticScenario}
+import graft.pipeline.{Jobs, Orchestrator, Reports, SyntheticScenario}
 
 /** Local smoke runner: exercises SparkEntry.entry the way the driver does
   * (rows > 0) plus the full initialize→update pipeline lifecycle on a temp
@@ -26,20 +26,19 @@ object Smoke {
       SyntheticScenario.admins(spark, tiles), Map(
         "school" -> SyntheticScenario.facilities(spark, "school", 40, nx = 16, ny = 16),
         "hc" -> SyntheticScenario.facilities(spark, "hc", 20, nx = 16, ny = 16)))
-    val result = Jobs.update(spark, store, "SYN", 14, "SMOKE", "20260801000000",
-      SyntheticScenario.envelopes(spark, members = 51),
-      Some(SyntheticScenario.tracks(spark, members = 20)),
-      Some(Geo.toWkb(Geo.box(-72.2, 18.8, -71.7, 19.2))))
-    println(s"[smoke] update processed=${result.processed} reason=${result.reason}")
-    println(s"[smoke] report keys = ${result.report.size}")
-    println(s"[smoke] report sample: storm=${result.report.get("storm")} " +
-      s"category=${result.report.get("storm_category")} " +
-      s"landfall=${result.report.get("expected_landfall")} " +
-      s"expected_children=${result.report.get("expected_children")}")
-    Jobs.ViewDirs.foreach { d =>
-      println(s"[smoke] $d: ${store.list(d).size} files")
-    }
-    assert(result.processed && result.report.nonEmpty)
+    val stats = Orchestrator.runUnits(spark, store,
+      Seq(Orchestrator.StormRun("SMOKE", "20260801000000")), Seq("SYN"), 14,
+      envelopesFor = (_, _) => SyntheticScenario.envelopes(spark, members = 51),
+      tracksFor = _ => Some(SyntheticScenario.tracks(spark, members = 20)),
+      boundaryFor = _ => Some(Geo.toWkb(Geo.box(-72.2, 18.8, -71.7, 19.2))))
+    println(s"[smoke] update $stats")
+    assert(stats.processed.nonEmpty, stats.errors.mkString("; "))
+    val report = Reports.fromJson(store.readText("reports_json/SYN_SMOKE_20260801000000.json"))
+    println(s"[smoke] report keys = ${report.size}")
+    println("[smoke] report sample: " + Seq("storm", "storm_category", "expected_landfall",
+      "expected_children").map(k => s"$k=${report.get(k)}").mkString(" "))
+    Jobs.ViewDirs.foreach(d => println(s"[smoke] $d: ${store.list(d).size} files"))
+    assert(report.nonEmpty)
     spark.stop()
   }
 }

@@ -1312,17 +1312,6 @@ object Dedup {
                                       spread: Boolean = true): DataFrame =
     explodedChunks(docs, idCol, textCol, chunkTokens, spread)
 
-  /** Per-chunk DISTINCT-document counts of one corpus slice — the additive
-    * building block of the streaming boilerplate-strip df map: each doc
-    * lives in exactly one microbatch, so the per-batch counts SUM to the
-    * corpus-wide count distinct. Map-side combinable both levels. */
-  def chunkDocFrequency(docs: DataFrame, idCol: String,
-                        textCol: String = "text",
-                        chunkTokens: Int = 5): DataFrame =
-    explodedChunks(docs, idCol, textCol, chunkTokens)
-      .select(col("__chunk").as("chunk"), col("__id")).distinct()
-      .groupBy("chunk").agg(count(lit(1)).as("df"))
-
   /** Strip a persisted chunk-occurrence store against a df map (columns
     * `chunk`, `df`) — the view half of the streaming boilerplate strip:
     * identical keep rule and reassembly as [[stripBoilerplateSpans]], so

@@ -91,11 +91,4 @@ object Aggregations {
       .agg(popCols.map(c => sum(col(s"actual_$c")).as(s"sum_$c")).head,
            popCols.map(c => sum(col(s"actual_$c")).as(s"sum_$c")).tail: _*)
   }
-
-  /** Report scalar totals (A5, reports.py:643-657): per threshold,
-    * ceil(sum(E_col)); optional columns stay null when all-null. */
-  def reportTotals(tiles: DataFrame, cols: Seq[String]): DataFrame = {
-    val aggs = cols.map(c => ceil(sum(col(s"E_$c"))).as(s"total_$c"))
-    tiles.groupBy(col("wind_threshold")).agg(aggs.head, aggs.tail: _*)
-  }
 }

@@ -48,10 +48,6 @@ object Deltas {
     df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** Argmax per group (W3, idxmax): row with max `valueCol` per key. */
-  def argmaxPerKey(df: DataFrame, keyCols: Seq[String], valueCol: String): DataFrame =
-    firstPerKey(df, keyCols, Seq(col(valueCol).desc))
-
   /**
    * Generic as-of join (pandas `merge_asof` backward semantics): for every
    * left row attach the payload of the LATEST right row with the same `by`

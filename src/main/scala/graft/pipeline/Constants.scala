@@ -18,9 +18,6 @@ object Constants {
   /** Country screening distance in meters (main_pipeline.py:185, snowflake_utils.py:608). */
   val CountryRangeMeters = 1.5e6
 
-  /** CCI weight: wind_threshold^2 * 1e-6 (impact_analysis.py:2637-2639). */
-  def cciWeight(windThreshold: Int): Double = windThreshold.toDouble * windThreshold * 1e-6
-
   /** Forecast cadence (hours) — as-of delta lookback (reports.py:195-222). */
   val ForecastStepHours = 6
 

@@ -89,9 +89,10 @@ object ImpactPipeline {
    * metrics over intersecting tiles.
    *
    * One pass: a single broadcast match over the facility points (tagged by
-   * kind) and the tiles, one groupBy(kind, envelope), and one collect of at
-   * most (kinds + 1) × envelopes rows; the rows are assembled on the driver
-   * into a local relation, one per envelope in envelope order.
+   * kind) and the tiles, at the cluster's width, one groupBy(kind, envelope),
+   * and one collect of at most (kinds + 1) × envelopes rows; the rows are
+   * assembled on the driver into a local relation, one per envelope in
+   * envelope order.
    */
   def trackView(envelopes: DataFrame,
                 schools: DataFrame, hcs: DataFrame,
@@ -121,7 +122,10 @@ object ImpactPipeline {
     // every facility row also counts under envelope -1, which tells an empty
     // layer (null column) from one that misses every envelope (0)
     val envIdx = coalesce(col("__envs"), typedLit(Seq.empty[Int]))
-    val perKind = SpatialJoin.broadcastMatch(sides.reduce(_ union _), "geometry", envWkb,
+    // the union has every side's partitions, most of them near-empty: the
+    // match runs at the cluster's width instead
+    val sided = sides.reduce(_ union _).coalesce(spark.sparkContext.defaultParallelism)
+    val perKind = SpatialJoin.broadcastMatch(sided, "geometry", envWkb,
         SpatialJoin.Intersects, "__envs")
       .select(col("__kind") +: explode(
           when(col("__kind") < tileKind, concat(envIdx, array(lit(-1)))).otherwise(envIdx))

@@ -6,6 +6,8 @@ import graft.util.Collects
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.util.chaining._
+
 /**
  * The three pipeline entry modes (reference main_pipeline.py:816-828):
  * initialize (build base layers), update (process a storm forecast), patch
@@ -76,8 +78,8 @@ object Jobs {
    * view (create_admin_country_layer; also the patch-mode on-request
    * creation, impact_analysis.py:1456-1466): overlay the tiles onto the
    * level's boundaries, roll up, attach names + geometry. Levels other than
-   * 1 store their own tile→region assignment implicitly via the boundary
-   * geometries; `update` re-derives it per level.
+   * 1 also store their tile→region map, which `update` and `patch` read
+   * (see [[tileRegions]]).
    */
   def initializeAdminLevel(spark: SparkSession, store: DataStore, country: String,
                            zoom: Int, level: Int, adminBoundaries: DataFrame): Unit = {
@@ -112,8 +114,22 @@ object Jobs {
   def initializedAdminLevels(store: DataStore, country: String): Seq[Int] =
     (1 to 5).filter(l => store.exists(s"admin_views/${country}_admin$l.parquet"))
 
+  /** Each tile's region id at admin `level` as (tile_id, id): level 1's ids
+    * ride on the mercator layer `tiles`; a deeper level's were stored by
+    * [[initializeAdminLevel]], and only a store without that map runs the
+    * overlay of `tiles` onto the level's `boundaries` (id, geometry). */
+  private def tileRegions(spark: SparkSession, store: DataStore, country: String,
+                          level: Int, tiles: DataFrame, boundaries: DataFrame): DataFrame = {
+    val mapRel = s"admin_views/${country}_admin${level}_tile_map.parquet"
+    if (level == 1) tiles.select("tile_id", "id")
+    else if (store.exists(mapRel)) store.readParquet(spark, mapRel)
+    else AdminOverlay.assign(tiles.select("tile_id", "geometry"), boundaries).select("tile_id", "id")
+  }
+
+  /** @param published the rels of every view and report the update wrote */
   case class UpdateResult(processed: Boolean, reason: String,
-                          report: Map[String, Any] = Map.empty)
+                          report: Map[String, Any] = Map.empty,
+                          published: Seq[String] = Nil)
 
   // --- update ------------------------------------------------------------
 
@@ -157,12 +173,13 @@ object Jobs {
     require(viewFormat == "csv" || viewFormat == "parquet",
       s"viewFormat must be csv or parquet, got $viewFormat")
     val vext = viewFormat
-    def fanoutViews(df: DataFrame, dir: String, name: String => String): Unit =
-      if (viewFormat == "csv") { store.writePartitionedCsv(df, dir, "wind_threshold", name); () }
-      else { store.writePartitionedParquet(df, dir, "wind_threshold", name); () }
-    def singleView(df: DataFrame, rel: String): Unit =
-      if (viewFormat == "csv") store.writeSingleCsv(df, rel)
-      else store.writeParquet(df, rel)
+    // each writer returns the rels it published
+    def fanoutViews(df: DataFrame, dir: String, name: String => String): Seq[String] =
+      (if (viewFormat == "csv") store.writePartitionedCsv(df, dir, "wind_threshold", name)
+       else store.writePartitionedParquet(df, dir, "wind_threshold", name)).map(n => s"$dir/$n")
+    def written(rel: String)(write: String => Unit): Seq[String] = { write(rel); Seq(rel) }
+    def singleView(df: DataFrame, rel: String): Seq[String] =
+      written(rel)(if (viewFormat == "csv") store.writeSingleCsv(df, _) else store.writeParquet(df, _))
     val t0 = System.nanoTime()
     val key = processedKey(storm, Seq(country), date)
     val processed = loadProcessed(store)
@@ -201,6 +218,10 @@ object Jobs {
     // the other outputs that read it start after that one has finished.
     val outputs = new Outputs
     import outputs.publish
+    // the outputs that write files, whose rels the result names
+    val writers = scala.collection.mutable.ArrayBuffer.empty[Output[Seq[String]]]
+    def publishFiles(after: Output[_]*)(body: => Seq[String]): Output[Seq[String]] =
+      publish(after: _*)(body).tap(writers += _)
     try {
       val tiles = cache(store.readParquet(spark, s"mercator_views/${country}_$zoom.parquet"))
       val admins = store.readParquet(spark, s"admin_views/${country}_admin1.parquet")
@@ -213,7 +234,7 @@ object Jobs {
 
       // tile view + per-threshold CSVs (S9 layout: one per threshold) — one
       // partitionBy pass fans out all thresholds (SURVEY.md §7.4)
-      publish(filled)(fanoutViews(tv, "mercator_impact_views", th => s"$prefix${th}_$zoom.$vext"))
+      publishFiles(filled)(fanoutViews(tv, "mercator_impact_views", th => s"$prefix${th}_$zoom.$vext"))
 
       // facility views ×4 (only kinds with a cached layer): kind -> (layer,
       // view); the track view reads the same layers. Each view's output
@@ -227,8 +248,9 @@ object Jobs {
               val layer = store.readParquet(spark, rel)
               val fv = cache(ImpactPipeline.facilityView(layer, envs, idCol))
               // one partitionBy pass fans out every threshold (S9 layout)
-              val output = publish()(store.writePartitionedParquet(fv.drop("geometry"),
-                s"${kind}_views", "wind_threshold", th => s"$prefix$th.parquet"))
+              val output = publishFiles()(store.writePartitionedParquet(fv.drop("geometry"),
+                s"${kind}_views", "wind_threshold", th => s"$prefix$th.parquet")
+                .map(n => s"${kind}_views/$n"))
               Some(kind -> (layer, Reports.Ready(fv, output)))
             }
           }.toMap
@@ -236,13 +258,13 @@ object Jobs {
 
       // admin views + CCIs — one pass per initialized admin level
       // (impact_analysis.py:2868-2907): level 1 reuses the admin ids already
-      // on the tiles; deeper levels re-overlay against the level's stored
-      // boundaries — no external lookup, mirroring the reference's reuse of
-      // the admin parquet's geometries.
+      // on the tiles; deeper levels read the tile map stored at init — no
+      // external lookup, mirroring the reference's reuse of the admin
+      // parquet's geometries.
       val cciTiles = cacheNarrow(Cci.calculate(tv, tiles))
       val cciAdmin = cacheNarrow(Cci.adminRollup(cciTiles))
       val cciOutput = // fills cciTiles
-        publish(filled)(singleView(cciTiles, s"mercator_impact_views/$prefix${zoom}_cci.$vext"))
+        publishFiles(filled)(singleView(cciTiles, s"mercator_impact_views/$prefix${zoom}_cci.$vext"))
 
       val levels = initializedAdminLevels(store, country) match {
         case Seq() => Seq(1)
@@ -254,19 +276,15 @@ object Jobs {
         val adminsN = if (level == 1) admins
           else store.readParquet(spark, s"admin_views/${country}_admin$level.parquet")
             .select(col("tile_id").as("id"), col("name"), col("geometry"))
-        val mapRel = s"admin_views/${country}_admin${level}_tile_map.parquet"
-        val tileIds = if (level == 1) tiles.select("tile_id", "id")
-          else if (store.exists(mapRel)) store.readParquet(spark, mapRel) // precomputed at init
-          else AdminOverlay.assign(tiles.select("tile_id", "geometry"), adminsN)
-            .select("tile_id", "id")
+        val tileIds = tileRegions(spark, store, country, level, tiles, adminsN)
         val avN = if (level == 1) cacheNarrow(ImpactPipeline.adminView(tv, tileIds, adminsN))
           else ImpactPipeline.adminView(tv.drop("id"), tileIds, adminsN)
         val cciAdminN = if (level == 1) cciAdmin
           else Cci.adminRollup(cciTiles.drop("id").join(
             broadcast(tileIds.withColumnRenamed("tile_id", "zone_id")), Seq("zone_id"), "left"))
-        val viewOutput = publish(filled)(fanoutViews(avN.drop("geometry"),
+        val viewOutput = publishFiles(filled)(fanoutViews(avN.drop("geometry"),
           "admin_impact_views", th => s"$prefix${th}_admin$level.$vext"))
-        val cciOutputN = publish(cciOutput)(
+        val cciOutputN = publishFiles(cciOutput)(
           singleView(cciAdminN, s"admin_impact_views/${prefix}admin${level}_cci.$vext"))
         level -> (Reports.Ready(avN, viewOutput), Reports.Ready(cciAdminN, cciOutputN))
       }.toMap
@@ -279,9 +297,9 @@ object Jobs {
       // track view, over the facility layers the facility views read
       (facilityLayer("school"), facilityLayer("hc")) match {
         case (Some(schools), Some(hcs)) =>
-          publish(filled)(store.writeParquet(ImpactPipeline.trackView(envs, schools, hcs,
-            facilityLayer("shelter"), facilityLayer("wash"), tiles),
-            s"track_views/${prefix}tracks.parquet"))
+          publishFiles(filled)(written(s"track_views/${prefix}tracks.parquet")(
+            store.writeParquet(ImpactPipeline.trackView(envs, schools, hcs,
+              facilityLayer("shelter"), facilityLayer("wash"), tiles), _)))
         case _ => ()
       }
 
@@ -293,16 +311,15 @@ object Jobs {
           val prevRel = s"reports_json/${country}_${storm}_${Reports.previousDate(date)}.json"
           if (store.exists(prevRel)) Reports.fromJson(store.readText(prevRel)) else Map.empty
         })
-      publish(report) {
-        if (report.get.nonEmpty)
-          store.writeText(s"reports_json/$prefix.json".replace("_.json", ".json"),
-            Reports.toJson(report.get))
-      }
+      publishFiles(report)(if (report.get.isEmpty) Nil
+        else written(s"reports_json/${country}_${storm}_$date.json")(
+          store.writeText(_, Reports.toJson(report.get))))
 
       outputs.run()
       saveProcessed(store, processed + (key -> date))
       appendRunLog(store, spark, storm, date, "SUCCESS", (System.nanoTime() - t0) / 1e9)
-      UpdateResult(processed = true, reason = "ok", report = report.get)
+      UpdateResult(processed = true, reason = "ok", report = report.get,
+        published = writers.flatMap(_.get).toSeq)
     } finally cached.foreach(_.unpersist())
   }
 
@@ -334,7 +351,8 @@ object Jobs {
         .select(col("tile_id").as("id"), col("name"), col("geometry"))
       val refreshed = store.readParquet(spark, baseRel)
       val withIds = if (level == 1) refreshed
-        else AdminOverlay.assign(refreshed.drop("id"), boundaries.select("id", "geometry"))
+        else refreshed.drop("id").join(
+          tileRegions(spark, store, country, level, refreshed, boundaries), Seq("tile_id"), "left")
       store.replace(adminRel)(tmp => store.writeParquet(adminLayer(withIds, boundaries), tmp))
     }
   }

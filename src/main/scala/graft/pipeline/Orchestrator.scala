@@ -1,8 +1,11 @@
 package graft.pipeline
 
 import graft.io.DataStore
+import graft.util.Collects
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import scala.util.{Failure, Success, Try}
 
 /**
  * Top-level `update` orchestration (reference main_pipeline.py:556-767,
@@ -13,8 +16,10 @@ import org.apache.spark.sql.functions._
  * The catalog filter is a declarative DataFrame pipeline (S4 + F3) so
  * predicate pushdown reaches a big catalog scan; only the surviving
  * (storm, forecast) keys — days' worth of forecasts, dozens of rows — are
- * collected to drive the per-storm loop. The heavy lifting stays inside
- * [[Jobs.update]], which is fully distributed.
+ * collected to drive the per-storm loop. [[runUnits]] is that loop, and the
+ * one body both drivers run: the CLI once per invocation, and
+ * [[graft.streaming.ImpactStream]] once per microbatch. The heavy lifting
+ * stays inside [[Jobs.update]], which is fully distributed.
  */
 object Orchestrator {
 
@@ -25,20 +30,25 @@ object Orchestrator {
                          skipped: Seq[(StormRun, String)] = Nil,
                          countriesProcessed: Int = 0,
                          filesWritten: Int = 0,
-                         errors: Seq[String] = Nil)
+                         errors: Seq[String] = Nil) {
+    def ++(o: UpdateStats): UpdateStats = UpdateStats(processed ++ o.processed,
+      skipped ++ o.skipped, countriesProcessed + o.countriesProcessed,
+      filesWritten + o.filesWritten, errors ++ o.errors)
+  }
 
   /**
    * Filter the storm catalog to the runnable set
    * (main_pipeline.py:612-652): optional exact-date filter (overrides the
    * recency window), optional storm filter, else forecasts from the last
    * `timeDeltaDays` days. Expects columns `track_id` and `forecast_time`
-   * (timestamp); emits one row per distinct (track_id, forecast key) with
-   * the reference's compact `yyyyMMddHHmmss` key.
+   * (timestamp); returns one unit per distinct (track_id, forecast key),
+   * with the reference's compact `yyyyMMddHHmmss` key, collected on the
+   * driver with a bound on their number.
    */
   def selectStorms(catalog: DataFrame, timeDeltaDays: Int,
                    today: java.time.LocalDate,
                    targetDate: Option[String] = None,
-                   targetStorm: Option[String] = None): DataFrame = {
+                   targetStorm: Option[String] = None): Seq[StormRun] = {
     val base = catalog
       .withColumn("__date", to_date(col("forecast_time")))
       .withColumn("__key", date_format(col("forecast_time"), "yyyyMMddHHmmss"))
@@ -47,72 +57,64 @@ object Orchestrator {
       case None => base.filter(
         datediff(lit(java.sql.Date.valueOf(today)), col("__date")) < timeDeltaDays)
     }
-    val stormed = targetStorm match {
-      case Some(s) => dated.filter(col("track_id") === s)
-      case None => dated
-    }
-    stormed.select(col("track_id").as("storm"), col("__key").as("date"))
-      .distinct().orderBy("storm", "date")
+    val stormed = targetStorm.fold(dated)(s => dated.filter(col("track_id") === s))
+    Collects.boundedCollect(
+        stormed.select(col("track_id"), col("__key")).distinct().orderBy("track_id", "__key"),
+        what = "storm selection", alternative = "a narrower timeDeltaDays / targetDate window")
+      .map(r => StormRun(r.getString(0), r.getString(1))).toSeq
   }
 
   /**
-   * Run [[Jobs.update]] for every runnable (storm, forecast) × country
-   * (main_pipeline.py:634-741). `envelopesFor`/`tracksFor` supply the
-   * per-storm inputs (the reference's warehouse reads); already-processed
-   * keys are skipped inside Jobs.update unless `rewrite`. Appends the batch
-   * completion signal when ≥ 1 storm processed.
+   * One tick of the 6-hourly cycle (main_pipeline.py:634-741): runs
+   * [[Jobs.update]] for every unit × country, one after another, and totals
+   * the outcomes. Already-processed keys are skipped inside Jobs.update
+   * unless `rewrite`. A unit that throws is counted in `errors` and the
+   * other units still run. Appends the batch completion signal when at
+   * least one unit was processed.
+   *
+   * @param envelopesFor a unit's envelopes for a country (the reference's
+   *                     warehouse read)
+   * @param tracksFor    a unit's ensemble tracks, which give the report its
+   *                     expected landfall
+   * @param boundaryFor  a country's boundary (WKB)
    */
+  def runUnits(spark: SparkSession, store: DataStore, runs: Seq[StormRun],
+               countries: Seq[String], zoom: Int,
+               envelopesFor: (String, StormRun) => DataFrame,
+               tracksFor: StormRun => Option[DataFrame] = _ => None,
+               boundaryFor: String => Option[Array[Byte]] = _ => None,
+               rewrite: Boolean = false): UpdateStats = {
+    val t0 = System.nanoTime()
+    val outcomes = for (run <- runs; country <- countries) yield (run, country,
+      Try(Jobs.update(spark, store, country, zoom, run.storm, run.date,
+        envelopesFor(country, run), tracksFor(run), boundaryFor(country), rewrite)))
+    val done = outcomes.collect { case (run, country, Success(r)) if r.processed => (run, country, r) }
+    val stats = UpdateStats(
+      processed = done.map(_._1),
+      skipped = outcomes.collect { case (run, _, Success(r)) if !r.processed => run -> r.reason },
+      countriesProcessed = done.size,
+      filesWritten = done.map(_._3.published.size).sum,
+      errors = outcomes.collect { case (run, country, Failure(e)) =>
+        s"${run.storm}@${run.date}/$country: ${e.getMessage}" })
+    if (done.nonEmpty)
+      appendCompletionLog(spark, store, done.map(_._1.storm).distinct, done.map(_._2).distinct,
+        stats.filesWritten, (System.nanoTime() - t0) / 1e9)
+    stats
+  }
+
+  /** The CLI's `update`: [[runUnits]] over the catalog's [[selectStorms]]. */
   def updateStorms(spark: SparkSession, store: DataStore,
                    catalog: DataFrame, countries: Seq[String], zoom: Int,
-                   envelopesFor: (String, String, String) => DataFrame,
-                   tracksFor: (String, String) => Option[DataFrame] = (_, _) => None,
+                   envelopesFor: (String, StormRun) => DataFrame,
+                   tracksFor: StormRun => Option[DataFrame] = _ => None,
                    boundaryFor: String => Option[Array[Byte]] = _ => None,
                    rewrite: Boolean = false, timeDeltaDays: Int = 2,
                    targetDate: Option[String] = None,
                    targetStorm: Option[String] = None,
                    today: java.time.LocalDate = java.time.LocalDate.now()): UpdateStats = {
     require(countries.nonEmpty, "no countries specified — nothing to process")
-    val t0 = System.nanoTime()
-    val runs = graft.util.Collects.boundedCollect(
-      selectStorms(catalog, timeDeltaDays, today, targetDate, targetStorm),
-      what = "updateStorms storm selection",
-      alternative = "a narrower timeDeltaDays / targetDate window")
-      .map(r => StormRun(r.getString(0), r.getString(1)))
-
-    var stats = UpdateStats()
-    val completedStorms = scala.collection.mutable.LinkedHashSet.empty[String]
-    val completedCountries = scala.collection.mutable.LinkedHashSet.empty[String]
-
-    runs.foreach { run =>
-      countries.foreach { country =>
-        try {
-          val envs = envelopesFor(country, run.storm, run.date)
-          val result = Jobs.update(spark, store, country, zoom, run.storm, run.date,
-            envs, tracksFor(run.storm, run.date), boundaryFor(country), rewrite)
-          if (result.processed) {
-            val prefix = s"${country}_${run.storm}_${run.date}"
-            val files = Jobs.ViewDirs.map(d => store.list(d).count(_.startsWith(prefix))).sum
-            stats = stats.copy(
-              processed = stats.processed :+ run,
-              countriesProcessed = stats.countriesProcessed + 1,
-              filesWritten = stats.filesWritten + files)
-            completedStorms += run.storm
-            completedCountries += country
-          } else {
-            stats = stats.copy(skipped = stats.skipped :+ (run, result.reason))
-          }
-        } catch {
-          case e: Exception =>
-            stats = stats.copy(errors = stats.errors :+
-              s"${run.storm}@${run.date}/$country: ${e.getMessage}")
-        }
-      }
-    }
-
-    if (completedStorms.nonEmpty)
-      appendCompletionLog(spark, store, completedStorms.toSeq, completedCountries.toSeq,
-        stats.filesWritten, (System.nanoTime() - t0) / 1e9)
-    stats
+    runUnits(spark, store, selectStorms(catalog, timeDeltaDays, today, targetDate, targetStorm),
+      countries, zoom, envelopesFor, tracksFor, boundaryFor, rewrite)
   }
 
   val CompletionLogRel = "control/pipeline_complete_log"
@@ -141,9 +143,7 @@ object Orchestrator {
                           filesWritten: Int, runtimeSeconds: Double): Unit = {
     import spark.implicits._
     val row = Seq((stormIds, countries, filesWritten, "SUCCESS", runtimeSeconds,
-      java.time.Instant.now().toString))
-      .toDF("storm_ids", "countries_processed", "files_written", "status",
-        "runtime_seconds", "logged_at")
+      java.time.Instant.now().toString)).toDF(completionLogSchema.fieldNames.toIndexedSeq: _*)
     store.controlTables.append(row, CompletionLogRel)
   }
 

@@ -1,28 +1,32 @@
 package graft.streaming
 
 import graft.io.DataStore
-import graft.pipeline.Jobs
+import graft.pipeline.Orchestrator
+import graft.pipeline.Orchestrator.{StormRun, UpdateStats}
+import graft.util.Collects
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
+import scala.jdk.CollectionConverters._
+
 /**
  * The reference's 6-hourly cron loop (SURVEY.md §2.8 "Trigger";
  * main_pipeline.py:556-767 + snowflake/README.md schedule) as a Structured
- * Streaming driver: a file-source stream watches an envelope drop directory;
- * each microbatch extracts its distinct (storm, forecast) keys and runs the
- * full [[Jobs.update]] view pipeline for each.
+ * Streaming driver: a file-source stream watches an envelope drop directory,
+ * and each microbatch runs its distinct (storm, forecast) units through
+ * [[Orchestrator.runUnits]], the CLI's per-tick body.
  *
  * Exactly-once layering mirrors the reference's belt-and-suspenders:
  *  - the streaming CHECKPOINT tracks which drop files were consumed (a
  *    re-started stream never reprocesses a file);
- *  - [[Jobs.update]]'s processed-state key check (storms.json analogue,
- *    J13) suppresses a re-DROPPED copy of an already-processed forecast.
- *
- * The per-batch work is fully distributed — foreachBatch runs the same
- * declarative view pipeline the batch driver runs; only the tiny key
- * extraction collects.
+ *  - [[graft.pipeline.Jobs.update]]'s processed-state key check (storms.json
+ *    analogue, J13) suppresses a re-DROPPED copy of an already-processed
+ *    forecast.
+ * A batch with a failed unit fails the query once its other units have
+ * run, so the checkpoint does not commit it: the next start replays the
+ * batch, the failed unit runs again and the published ones skip.
  */
 object ImpactStream {
 
@@ -34,18 +38,20 @@ object ImpactStream {
     StructField("wind_threshold", IntegerType),
     StructField("geometry", BinaryType)))
 
-  case class BatchResult(storm: String, date: String, processed: Boolean, reason: String)
-
   /**
-   * Start the stream. Results of each per-key update are appended to
-   * `onResult` (driver-side callback; used by specs and ops logging).
-   * Trigger.AvailableNow turns this into the reference's cron batch;
-   * a processing-time trigger turns the same code into a live feed.
+   * Start the stream. Each batch's units read their envelopes from the
+   * batch, and their tracks and boundaries from `tracksFor` and
+   * `boundaryFor`; `onBatch` gets each batch's stats (driver-side; used by
+   * specs and ops logging). Trigger.AvailableNow turns this into the
+   * reference's cron batch; a processing-time trigger turns the same code
+   * into a live feed.
    */
   def start(spark: SparkSession, store: DataStore, dropDir: String,
-            country: String, zoom: Int,
+            countries: Seq[String], zoom: Int,
+            tracksFor: StormRun => Option[DataFrame] = _ => None,
+            boundaryFor: String => Option[Array[Byte]] = _ => None,
             trigger: Trigger = Trigger.AvailableNow(),
-            onResult: BatchResult => Unit = _ => ()): StreamingQuery = {
+            onBatch: UpdateStats => Unit = _ => ()): StreamingQuery = {
     val stream = spark.readStream.schema(DropSchema).parquet(dropDir)
     // one checkpoint per watched directory (String.hashCode is stable
     // across JVMs) — two drop feeds into the same store never collide
@@ -53,30 +59,34 @@ object ImpactStream {
     stream.writeStream
       .outputMode("append")
       .option("checkpointLocation", store.path("control", ckpt))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val keys = batch.select("track_id", "forecast_time").distinct()
-          .orderBy("track_id", "forecast_time").collect()
-        keys.foreach { k =>
-          val (storm, date) = (k.getString(0), k.getString(1))
-          val envs = batch
-            .filter(col("track_id") === storm && col("forecast_time") === date)
-            .drop("track_id", "forecast_time")
-          val r = Jobs.update(spark, store, country, zoom, storm, date, envs, None)
-          onResult(BatchResult(storm, date, r.processed, r.reason))
-        }
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val keys = batch.select("track_id", "forecast_time").distinct().orderBy("track_id", "forecast_time")
+        val runs = Collects.boundedCollect(keys, s"ImpactStream batch $batchId keys", "smaller drop batches")
+          .map(k => StormRun(k.getString(0), k.getString(1))).toSeq
+        val stats = Orchestrator.runUnits(spark, store, runs, countries, zoom,
+          envelopesFor = (_, run) => batch
+            .filter(col("track_id") === run.storm && col("forecast_time") === run.date)
+            .drop("track_id", "forecast_time"),
+          tracksFor, boundaryFor)
+        onBatch(stats)
+        if (stats.errors.nonEmpty)
+          throw new IllegalStateException(s"ImpactStream batch $batchId: " +
+            s"${stats.errors.size} unit(s) failed: ${stats.errors.mkString("; ")}")
       }
       .trigger(trigger)
       .start()
   }
 
-  /** Run one AvailableNow pass over the drop directory and return the
-    * per-key results (the cron-equivalent entry point). */
+  /** Run one AvailableNow pass over the drop directory and return its
+    * batches' stats, totalled (the cron-equivalent entry point). Throws if
+    * a batch failed. */
   def runOnce(spark: SparkSession, store: DataStore, dropDir: String,
-              country: String, zoom: Int): Seq[BatchResult] = {
-    val results = new java.util.concurrent.ConcurrentLinkedQueue[BatchResult]()
-    val q = start(spark, store, dropDir, country, zoom,
-      onResult = results.add(_))
-    q.awaitTermination()
-    results.toArray(Array.empty[BatchResult]).toSeq
+              countries: Seq[String], zoom: Int,
+              tracksFor: StormRun => Option[DataFrame] = _ => None,
+              boundaryFor: String => Option[Array[Byte]] = _ => None): UpdateStats = {
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[UpdateStats]()
+    start(spark, store, dropDir, countries, zoom, tracksFor, boundaryFor,
+      onBatch = batches.add(_)).awaitTermination()
+    batches.asScala.foldLeft(UpdateStats())(_ ++ _)
   }
 }

@@ -26,7 +26,4 @@ object Hashing {
     z = (z ^ (z >>> 33)) * -4265267296055464877L // 0xc4ceb9fe1a85ec53
     z ^ (z >>> 33)
   }
-
-  /** Seeded 64-bit hash of a string. */
-  def hash64(s: String, seed: Long): Long = mix64(fnv64(s) ^ mix64(seed))
 }

@@ -175,6 +175,9 @@ class JobsSpec extends SparkSpec {
 
   test("patch overwrites a column and re-aggregates admin views") {
     initOnce()
+    // a two-level store: admin2's tile map is stored at its init
+    val admins2 = SyntheticScenario.admins(spark, tiles, adminZoom = 12)
+    Jobs.initializeAdminLevel(spark, store, country, zoom, 2, admins2)
     val newVals = tiles.select(col("tile_id"), (col("population") * 2).as("population"))
     Jobs.patch(spark, store, country, zoom, newVals)
     val base = store.readParquet(spark, s"mercator_views/${country}_$zoom.parquet")
@@ -183,6 +186,29 @@ class JobsSpec extends SparkSpec {
     assert(math.abs(newSum - 2 * origSum) < 1e-6)
     val adminView = store.readParquet(spark, s"admin_views/${country}_admin1.parquet")
     assert(math.abs(adminView.agg(sum("population")).as[Double].head() - 2 * origSum) < 1e-6)
+
+    // the patched admin2 rows equal those of an overlay of the patched base
+    // onto admin2's boundaries, which is how its init builds the layer
+    def admin2() = {
+      val df = store.readParquet(spark, s"admin_views/${country}_admin2.parquet").drop("geometry")
+      (df.columns.toSeq, df.orderBy("tile_id").collect().toSeq.map(_.toSeq))
+    }
+    val (patchedCols, patched) = admin2()
+    assert(patched.size == admins2.count())
+    assert(math.abs(patched.map(_(patchedCols.indexOf("population")).asInstanceOf[Double]).sum -
+      2 * origSum) < 1e-6)
+    Jobs.initializeAdminLevel(spark, store, country, zoom, 2, admins2)
+    val (overlaidCols, overlaid) = admin2()
+    assert(patchedCols == overlaidCols)
+    def same(a: Any, b: Any): Boolean = (a, b) match {
+      case (x: Double, y: Double) => math.abs(x - y) <= 1e-9 * math.max(1.0, math.abs(x))
+      case _ => a == b
+    }
+    patched.zip(overlaid).foreach { case (p, o) =>
+      assert(p.zip(o).forall { case (x, y) => same(x, y) }, s"patched $p vs overlaid $o")
+    }
+    store.remove(s"admin_views/${country}_admin2.parquet")
+    store.remove(s"admin_views/${country}_admin2_tile_map.parquet")
   }
 
   test("report structure validates against the reference template") {

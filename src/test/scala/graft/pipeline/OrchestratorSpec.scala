@@ -38,16 +38,16 @@ class OrchestratorSpec extends SparkSpec {
 
   test("selectStorms: recency window, target date, target storm") {
     val recent = Orchestrator.selectStorms(catalog, timeDeltaDays = 2, today = today)
-      .collect().map(r => (r.getString(0), r.getString(1)))
+      .map(r => (r.storm, r.date))
     assert(recent.toSet == Set(
       ("ALPHA", "20260801000000"), ("ALPHA", "20260801060000"), ("BRAVO", "20260801000000")))
 
     val byDate = Orchestrator.selectStorms(catalog, 2, today, targetDate = Some("2026-07-20"))
-      .collect().map(_.getString(0))
+      .map(_.storm)
     assert(byDate.toSeq == Seq("STALE")) // targetDate overrides the window
 
     val byStorm = Orchestrator.selectStorms(catalog, 2, today, targetStorm = Some("BRAVO"))
-      .collect().map(r => (r.getString(0), r.getString(1)))
+      .map(r => (r.storm, r.date))
     assert(byStorm.toSeq == Seq(("BRAVO", "20260801000000")))
   }
 
@@ -58,7 +58,7 @@ class OrchestratorSpec extends SparkSpec {
     assert(pre.processed)
 
     val stats = Orchestrator.updateStorms(spark, store, catalog, Seq(country), zoom,
-      envelopesFor = (_, _, _) => envs, today = today)
+      envelopesFor = (_, _) => envs, today = today)
 
     assert(stats.processed.map(r => (r.storm, r.date)).toSet ==
       Set(("ALPHA", "20260801060000"), ("BRAVO", "20260801000000")))
@@ -67,6 +67,10 @@ class OrchestratorSpec extends SparkSpec {
     assert(stats.errors.isEmpty, stats.errors.mkString("; "))
     assert(stats.countriesProcessed == 2)
     assert(stats.filesWritten > 0)
+    // the rels the updates name are the entries a listing of the view dirs finds
+    val listed = stats.processed.map(r => Jobs.ViewDirs.map(d =>
+      store.list(d).count(_.startsWith(s"${country}_${r.storm}_${r.date}"))).sum).sum
+    assert(stats.filesWritten == listed)
 
     // completion signal appended exactly once, naming both storms
     val log = Orchestrator.readCompletionLog(spark, store)
@@ -78,7 +82,7 @@ class OrchestratorSpec extends SparkSpec {
 
     // nothing left to do -> no second completion row
     val again = Orchestrator.updateStorms(spark, store, catalog, Seq(country), zoom,
-      envelopesFor = (_, _, _) => envs, today = today)
+      envelopesFor = (_, _) => envs, today = today)
     assert(again.processed.isEmpty && again.skipped.size == 3)
     assert(Orchestrator.readCompletionLog(spark, store).count() == 1)
   }
